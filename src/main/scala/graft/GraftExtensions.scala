@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, Expression, ExpressionInfo, If, IsNull, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
-import graft.fn.{ArrayDotProduct, CosineSim, VincentyKm}
+import graft.fn.{KernelCall, Kernels}
 
 /** Engine extension point (SURVEY.md §2.8 UDF surface): registers the
   * engine's native expressions with the session's function registry so
@@ -26,17 +26,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def binaryFn(name: String, clazz: Class[_],
-                       mk: (Expression, Expression) => Expression) = (
-    new FunctionIdentifier(name),
-    new ExpressionInfo(clazz.getName, name),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, s"$name expects 2 args; got ${children.size}")
-      mk(children(0), children(1))
-    })
+  private def fn(name: String, clazz: Class[_], build: Seq[Expression] => Expression) =
+    (new FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), build)
 
-  /** Structural parameters (shingle size, signature width) must be
-    * integer literals — they shape the expression, not the data.
+  /** Structural parameters (capacity, sketch width) must be integer
+    * literals — they shape the expression, not the data.
     */
   private def litInt(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -44,369 +38,52 @@ object GraftExtensions {
       s"$what must be an integer literal, got $other")
   }
 
-  /** Video frame decoders: (bin[, nBins[, stride[, maxFrames]]]) with
-    * library defaults applied for omitted structural literals.
-    */
-  private def frameFn(name: String, clazz: Class[_],
-                      mk: (Expression, Int, Int, Int) => Expression) = (
-    new FunctionIdentifier(name),
-    new ExpressionInfo(clazz.getName, name),
-    (children: Seq[Expression]) => {
-      require(children.nonEmpty && children.size <= 4,
-        s"$name expects (bin[, nBins[, stride[, maxFrames]]]); got ${children.size} args")
-      def arg(i: Int, dflt: Int, what: String) =
-        if (children.size > i) litInt(children(i), what) else dflt
-      mk(children.head, arg(1, 16, "nBins"), arg(2, 1, "stride"),
-        arg(3, 256, "maxFrames"))
-    })
+  private def arity(name: String, args: Seq[Expression], n: Int, sig: String): Unit =
+    require(args.size == n, s"$name expects ($sig); got ${args.size} args")
 
-  private def unaryFn(name: String, clazz: Class[_],
-                      mk: Expression => Expression) = (
-    new FunctionIdentifier(name),
-    new ExpressionInfo(clazz.getName, name),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, s"$name expects 1 arg; got ${children.size}")
-      mk(children.head)
-    })
-
-  /** The engine's SQL function surface (VERDICT r2 item 8): every
-    * library-level scalar also callable as SQL — `vincenty_km`,
-    * `dot_product`, `cosine_sim`, `hamming64`, the heavy-hitters
-    * aggregate `topk_freq(item[, weight], capacity, k)`, and the
-    * multimodal decoders `png_gray_features` / `wav_pcm_features` /
-    * `mp4_meta` / `apng_frame_features` / `gif_frame_features`.
+  /** The engine's SQL function surface: every kernel of
+    * [[graft.fn.Kernels]] under its SQL name, plus the aggregates
+    * (`topk_freq`, `kmv_distinct`, `hll_distinct`, `vec_mean`,
+    * `vec_sum`), `url_normalize` and `hamming64`.
     */
-  private[graft] val functions = Seq(
-    unaryFn("png_gray_features", classOf[graft.fn.PngGrayFeatures],
-      graft.fn.PngGrayFeatures(_)),
-    unaryFn("wav_pcm_features", classOf[graft.fn.WavPcmFeatures],
-      graft.fn.WavPcmFeatures(_)),
-    unaryFn("flac_pcm_features", classOf[graft.fn.FlacPcmFeatures],
-      graft.fn.FlacPcmFeatures(_)),
-    unaryFn("mp4_meta", classOf[graft.fn.Mp4Meta], graft.fn.Mp4Meta(_)),
-    unaryFn("mp4_avc_meta", classOf[graft.fn.Mp4AvcMeta],
-      graft.fn.Mp4AvcMeta(_)),
-    unaryFn("mp4_hevc_meta", classOf[graft.fn.Mp4HevcMeta],
-      graft.fn.Mp4HevcMeta(_)),
-    (
-      new FunctionIdentifier("mp4_sync_offsets"),
-      new ExpressionInfo(classOf[graft.fn.Mp4SyncOffsets].getName,
-        "mp4_sync_offsets"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"mp4_sync_offsets expects (content, maxN); got ${children.size} args")
-        graft.fn.Mp4SyncOffsets(children(0), litInt(children(1), "maxN"))
-      }),
-    unaryFn("jpeg_gray_features", classOf[graft.fn.JpegGrayFeatures],
-      graft.fn.JpegGrayFeatures(_)),
-    frameFn("apng_frame_features", classOf[graft.fn.ApngFrameFeatures],
-      graft.fn.ApngFrameFeatures(_, _, _, _)),
-    frameFn("gif_frame_features", classOf[graft.fn.GifFrameFeatures],
-      graft.fn.GifFrameFeatures(_, _, _, _)),
-    frameFn("mjpeg_frame_features", classOf[graft.fn.MjpegFrameFeatures],
-      graft.fn.MjpegFrameFeatures(_, _, _, _)),
-    frameFn("h264_keyframe_frames", classOf[graft.fn.H264KeyframeFrames],
-      graft.fn.H264KeyframeFrames(_, _, _, _)),
-    frameFn("h264_gop_frames", classOf[graft.fn.H264GopFrames],
-      graft.fn.H264GopFrames(_, _, _, _)),
-    unaryFn("image_dhash64", classOf[graft.fn.ImageDhash64],
-      graft.fn.ImageDhash64(_)),
-    unaryFn("mp4_keyframe_dhash64", classOf[graft.fn.Mp4KeyframeDhash64],
-      graft.fn.Mp4KeyframeDhash64(_)),
-    unaryFn("webm_meta", classOf[graft.fn.WebmMeta], graft.fn.WebmMeta(_)),
-    unaryFn("flac_meta", classOf[graft.fn.FlacMeta], graft.fn.FlacMeta(_)),
-    unaryFn("audio_fingerprint64", classOf[graft.fn.AudioFingerprint64],
-      graft.fn.AudioFingerprint64(_)),
-    unaryFn("mp3_synth", classOf[graft.fn.Mp3Synth], graft.fn.Mp3Synth(_)),
-    unaryFn("mp3_side_stats", classOf[graft.fn.Mp3SideStats],
-      graft.fn.Mp3SideStats(_)),
-    unaryFn("ogg_synth", classOf[graft.fn.OggSynth], graft.fn.OggSynth(_)),
-    unaryFn("ogg_stream_meta", classOf[graft.fn.OggStreamMeta],
-      graft.fn.OggStreamMeta(_)),
-    unaryFn("vorbis_setup_stats", classOf[graft.fn.VorbisSetupStats],
-      graft.fn.VorbisSetupStats(_)),
-    unaryFn("vorbis_setup_full", classOf[graft.fn.VorbisSetupFull],
-      graft.fn.VorbisSetupFull(_)),
-    unaryFn("vorbis_pcm_synth", classOf[graft.fn.VorbisPcmSynth],
-      graft.fn.VorbisPcmSynth(_)),
-    unaryFn("vorbis_pcm_stats", classOf[graft.fn.VorbisPcmStats],
-      graft.fn.VorbisPcmStats(_)),
-    unaryFn("opus_synth", classOf[graft.fn.OpusSynth],
-      graft.fn.OpusSynth(_)),
-    unaryFn("vorbis_encode_synth", classOf[graft.fn.VorbisEncodeSynth],
-      graft.fn.VorbisEncodeSynth(_)),
-    unaryFn("pdf_synth", classOf[graft.fn.PdfSynth], graft.fn.PdfSynth(_)),
-    unaryFn("mp4_multiref_synth", classOf[graft.fn.Mp4MultiRefSynth],
-      graft.fn.Mp4MultiRefSynth(_)),
-    unaryFn("mp4_bgop_synth", classOf[graft.fn.Mp4BGopSynth],
-      graft.fn.Mp4BGopSynth(_)),
-    unaryFn("mp4_wgop_synth", classOf[graft.fn.Mp4WGopSynth],
-      graft.fn.Mp4WGopSynth(_)),
-    unaryFn("mp4_fmp4_synth", classOf[graft.fn.Mp4Fmp4Synth],
-      graft.fn.Mp4Fmp4Synth(_)),
-    unaryFn("mp4_bgop_pts_synth", classOf[graft.fn.Mp4BGopPtsSynth],
-      graft.fn.Mp4BGopPtsSynth(_)),
-    (
-      new FunctionIdentifier("h264_clip_frames"),
-      new ExpressionInfo(classOf[graft.fn.H264ClipFrames].getName,
-        "h264_clip_frames"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          s"h264_clip_frames expects (content, nBins, everyMs, maxN, maxFrames); got ${children.size} args")
-        val everyMs = children(2) match {
-          case Literal(v: Double, _) => v
-          case Literal(v: Float, _) => v.toDouble
-          case Literal(v: Int, _) => v.toDouble
-          case Literal(v: Long, _) => v.toDouble
-          // SQL decimal literals (e.g. 400.0) parse as Decimal
-          case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-          case other => throw new IllegalArgumentException(
-            s"everyMs must be a numeric literal, got $other")
-        }
-        graft.fn.H264ClipFrames(children.head, litInt(children(1), "nBins"),
-          everyMs, litInt(children(3), "maxN"), litInt(children(4), "maxFrames"))
-      }),
-    unaryFn("pdf_text", classOf[graft.fn.PdfTextStats],
-      graft.fn.PdfTextStats(_)),
-    unaryFn("subtitle_synth", classOf[graft.fn.SubtitleSynth],
-      graft.fn.SubtitleSynth(_)),
-    unaryFn("subtitle_cues", classOf[graft.fn.SubtitleCues],
-      graft.fn.SubtitleCues(_)),
-    unaryFn("mp4_subtitle_synth", classOf[graft.fn.Mp4SubtitleSynth],
-      graft.fn.Mp4SubtitleSynth(_)),
-    unaryFn("mp4_subtitle_cues", classOf[graft.fn.Mp4SubtitleCues],
-      graft.fn.Mp4SubtitleCues(_)),
-    unaryFn("subtitle_enc_synth", classOf[graft.fn.SubtitleEncSynth],
-      graft.fn.SubtitleEncSynth(_)),
-    unaryFn("lang_id_predict", classOf[graft.fn.LangIdPredict],
-      graft.fn.LangIdPredict(_)),
-    unaryFn("mp4_ttml_synth", classOf[graft.fn.Mp4TtmlSynth],
-      graft.fn.Mp4TtmlSynth(_)),
-    unaryFn("mp4_elst_synth", classOf[graft.fn.Mp4ElstSynth],
-      graft.fn.Mp4ElstSynth(_)),
-    unaryFn("webm_subtitle_synth", classOf[graft.fn.WebmSubtitleSynth],
-      graft.fn.WebmSubtitleSynth(_)),
-    unaryFn("webm_subtitle_cues", classOf[graft.fn.WebmSubtitleCues],
-      graft.fn.WebmSubtitleCues(_)),
-    unaryFn("webm_block_synth", classOf[graft.fn.WebmBlockSynth],
-      graft.fn.WebmBlockSynth(_)),
-    (
-      new FunctionIdentifier("webm_block_index"),
-      new ExpressionInfo(classOf[graft.fn.WebmBlockIndex].getName,
-        "webm_block_index"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"webm_block_index expects (content, maxN); got ${children.size} args")
-        graft.fn.WebmBlockIndex(children(0), litInt(children(1), "maxN"))
-      }),
-    unaryFn("opus_toc_stats", classOf[graft.fn.OpusTocStats],
-      graft.fn.OpusTocStats(_)),
-    unaryFn("charset_sniff", classOf[graft.fn.CharsetSniff],
-      graft.fn.CharsetSniff(_)),
-    binaryFn("charset_decode", classOf[graft.fn.CharsetDecode],
-      graft.fn.CharsetDecode(_, _)),
-    binaryFn("charset_detect", classOf[graft.fn.CharsetDetect],
-      graft.fn.CharsetDetect(_, _)),
-    unaryFn("pii_scan", classOf[graft.fn.PiiScan], graft.fn.PiiScan(_)),
-    unaryFn("url_normalize", classOf[graft.fn.UrlNormalize],
-      graft.fn.UrlNormalize(_)),
-    unaryFn("html_text", classOf[graft.fn.HtmlText], graft.fn.HtmlText(_)),
-    unaryFn("html_text_full", classOf[graft.fn.HtmlText],
-      graft.fn.HtmlText(_, numericRefs = true)),
-    (
-      new FunctionIdentifier("robots_allowed"),
-      new ExpressionInfo(classOf[graft.fn.RobotsAllowed].getName, "robots_allowed"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"robots_allowed expects (robots_txt, agent, path); got ${children.size} args")
-        graft.fn.RobotsAllowed(children(0), children(1), children(2))
-      }),
-    (
-      new FunctionIdentifier("mp4_keyframe_dhashes"),
-      new ExpressionInfo(classOf[graft.fn.Mp4KeyframeDhashes].getName, "mp4_keyframe_dhashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"mp4_keyframe_dhashes expects (content, maxN); got ${children.size} args")
-        graft.fn.Mp4KeyframeDhashes(children(0), litInt(children(1), "maxN"))
-      }),
-    (
-      new FunctionIdentifier("webm_vp8_dhashes"),
-      new ExpressionInfo(classOf[graft.fn.WebmVp8Dhashes].getName, "webm_vp8_dhashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"webm_vp8_dhashes expects (content, maxN); got ${children.size} args")
-        graft.fn.WebmVp8Dhashes(children(0), litInt(children(1), "maxN"))
-      }),
-    unaryFn("justext_blocks", classOf[graft.fn.JustextBlocks],
-      graft.fn.JustextBlocks(_)),
-    unaryFn("main_text", classOf[graft.fn.MainText], graft.fn.MainText(_)),
-    unaryFn("justext_synth", classOf[graft.fn.JustextSynth],
-      graft.fn.JustextSynth(_)),
-    unaryFn("av1_meta", classOf[graft.fn.Av1Meta], graft.fn.Av1Meta(_)),
-    unaryFn("av1_synth", classOf[graft.fn.Av1Synth], graft.fn.Av1Synth(_)),
-    unaryFn("hls_variants", classOf[graft.fn.HlsVariants], graft.fn.HlsVariants(_)),
-    unaryFn("hls_segments", classOf[graft.fn.HlsSegments], graft.fn.HlsSegments(_)),
-    unaryFn("mpd_representations", classOf[graft.fn.MpdRepresentations],
-      graft.fn.MpdRepresentations(_)),
-    unaryFn("m3u8_synth", classOf[graft.fn.M3u8Synth], graft.fn.M3u8Synth(_)),
-    unaryFn("mpd_synth", classOf[graft.fn.MpdSynth], graft.fn.MpdSynth(_)),
-    unaryFn("audio_profile", classOf[graft.fn.AudioProfile],
-      graft.fn.AudioProfile(_)),
-    unaryFn("audio_profile_synth", classOf[graft.fn.AudioProfileSynth],
-      graft.fn.AudioProfileSynth(_)),
-    (
-      new FunctionIdentifier("video_gop_dhashes"),
-      new ExpressionInfo(classOf[graft.fn.VideoGopDhashes].getName, "video_gop_dhashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"video_gop_dhashes expects (content, maxN); got ${children.size} args")
-        graft.fn.VideoGopDhashes(children(0), litInt(children(1), "maxN"))
-      }),
-    (
-      new FunctionIdentifier("video_kf_dhashes"),
-      new ExpressionInfo(classOf[graft.fn.VideoKeyframeDhashes].getName, "video_kf_dhashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"video_kf_dhashes expects (content, maxN); got ${children.size} args")
-        graft.fn.VideoKeyframeDhashes(children(0), litInt(children(1), "maxN"))
-      }),
-    unaryFn("image_dims", classOf[graft.fn.ImageDims], graft.fn.ImageDims(_)),
-    unaryFn("image_codec_profile", classOf[graft.fn.ImageCodecProfile],
-      graft.fn.ImageCodecProfile(_)),
-    unaryFn("audio_meta", classOf[graft.fn.AudioMeta], graft.fn.AudioMeta(_)),
-    (
-      new FunctionIdentifier("mp4_keyframe_features"),
-      new ExpressionInfo(classOf[graft.fn.Mp4KeyframeFeatures].getName, "mp4_keyframe_features"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"mp4_keyframe_features expects (content, nBins); got ${children.size} args")
-        graft.fn.Mp4KeyframeFeatures(children(0), litInt(children(1), "nBins"))
-      }),
-    (
-      new FunctionIdentifier("mp4_keyframe_thumb"),
-      new ExpressionInfo(classOf[graft.fn.Mp4KeyframeThumb].getName, "mp4_keyframe_thumb"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"mp4_keyframe_thumb expects (content, tw, th); got ${children.size} args")
-        graft.fn.Mp4KeyframeThumb(children(0), litInt(children(1), "tw"),
-          litInt(children(2), "th"))
-      }),
-    unaryFn("text_profile", classOf[graft.fn.TextProfile],
-      graft.fn.TextProfile(_)),
-    unaryFn("repetition_profile", classOf[graft.fn.RepetitionProfile],
-      graft.fn.RepetitionProfile(_)),
-    unaryFn("vec_mean", classOf[graft.fn.VecPoolAgg],
-      graft.fn.VecPoolAgg(_, mean = true)),
-    unaryFn("vec_sum", classOf[graft.fn.VecPoolAgg],
-      graft.fn.VecPoolAgg(_, mean = false)),
-    (
-      new FunctionIdentifier("gray_thumbnail"),
-      new ExpressionInfo(classOf[graft.fn.GrayThumbnail].getName, "gray_thumbnail"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"gray_thumbnail expects (content, tw, th); got ${children.size} args")
-        graft.fn.GrayThumbnail(children(0), litInt(children(1), "tw"),
-          litInt(children(2), "th"))
-      }),
-    (
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[graft.fn.WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"word_shingles expects (text, n); got ${children.size} args")
-        graft.fn.WordShingles(children(0), litInt(children(1), "n"))
-      }),
-    (
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[graft.fn.MinhashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, s"minhash_sig expects (text, n, k); got ${children.size} args")
-        graft.fn.MinhashSig(children(0), litInt(children(1), "n"), litInt(children(2), "k"))
-      }),
-    (
-      new FunctionIdentifier("term_counts"),
-      new ExpressionInfo(classOf[graft.fn.TermCounts].getName, "term_counts"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, s"term_counts expects (text); got ${children.size} args")
-        graft.fn.TermCounts(children(0))
-      }),
-    (
-      new FunctionIdentifier("vincenty_km"),
-      new ExpressionInfo(classOf[VincentyKm].getName, "vincenty_km"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          s"vincenty_km expects (lat1, lon1, lat2, lon2); got ${children.size} args")
-        VincentyKm(children(0), children(1), children(2), children(3))
-      }),
-    (
-      new FunctionIdentifier("topk_freq"),
-      new ExpressionInfo(classOf[graft.fn.SpaceSavingTopK].getName, "topk_freq"),
-      (children: Seq[Expression]) => children match {
-        case Seq(item, cap, k) =>
-          graft.fn.SpaceSavingTopK(item, litInt(cap, "capacity"), litInt(k, "k"))
-        case Seq(item, w, cap, k) =>
-          graft.fn.SpaceSavingTopK(item, w, litInt(cap, "capacity"), litInt(k, "k"))
-        case other => throw new IllegalArgumentException(
-          s"topk_freq expects (item[, weight], capacity, k); got ${other.size} args")
-      }),
-    (
-      new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[graft.fn.WinnowFingerprints].getName, "winnow_fps"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"winnow_fps expects (text, k, w); got ${children.size} args")
-        graft.fn.WinnowFingerprints(children(0), litInt(children(1), "k"),
-          litInt(children(2), "w"))
-      }),
-    (
-      new FunctionIdentifier("winnow_fps_xx"),
-      new ExpressionInfo(classOf[graft.fn.WinnowFingerprints].getName, "winnow_fps_xx"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"winnow_fps_xx expects (text, k, w); got ${children.size} args")
-        graft.fn.WinnowFingerprints(children(0), litInt(children(1), "k"),
-          litInt(children(2), "w"), xx = true)
-      }),
-    (
-      new FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[graft.fn.KmvDistinct].getName, "kmv_distinct"),
-      (children: Seq[Expression]) => {
-        // span fixed to the 60-bit order-hash convention: pair with
-        // conv(substr(md5(x), 1, 15), 16, 10) (Sketches.orderHash)
-        require(children.size == 2,
-          s"kmv_distinct expects (hash60, k); got ${children.size} args")
-        graft.fn.KmvDistinct(children(0), litInt(children(1), "k"),
-          graft.ext.Sketches.OrderHashSpan)
-      }),
-    (
-      new FunctionIdentifier("hll_distinct"),
-      new ExpressionInfo(classOf[graft.fn.HllDistinct].getName, "hll_distinct"),
-      (children: Seq[Expression]) => {
-        // width fixed to the 60-bit order-hash convention, like
-        // kmv_distinct above
-        require(children.size == 2,
-          s"hll_distinct expects (hash60, p); got ${children.size} args")
-        graft.fn.HllDistinct(children(0), litInt(children(1), "p"), 60)
-      }),
-    binaryFn("dot_product", classOf[ArrayDotProduct], ArrayDotProduct(_, _)),
-    binaryFn("cosine_sim", classOf[CosineSim], CosineSim(_, _)),
-    unaryFn("int8_scale", classOf[graft.fn.Int8Scale], graft.fn.Int8Scale(_)),
-    binaryFn("quantize_int8", classOf[graft.fn.QuantizeInt8],
-      graft.fn.QuantizeInt8(_, _)),
-    (
-      new FunctionIdentifier("cosine_sim_q8"),
-      new ExpressionInfo(classOf[graft.fn.CosineSimQ8].getName, "cosine_sim_q8"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"cosine_sim_q8 expects (fp_vec, q_vec, scale); got ${children.size} args")
-        graft.fn.CosineSimQ8(children(0), children(1), children(2))
-      }),
-    binaryFn("polyfit_solve", classOf[graft.fn.PolyfitSolve],
-      graft.fn.PolyfitSolve(_, _)),
+  private[graft] val functions = Kernels.all.map(k =>
+    fn(k.name, classOf[KernelCall], k.build)) ++ Seq(
+    fn("url_normalize", classOf[graft.fn.UrlNormalize], args => {
+      arity("url_normalize", args, 1, "url")
+      graft.fn.UrlNormalize(args.head)
+    }),
+    fn("vec_mean", classOf[graft.fn.VecPoolAgg], args => {
+      arity("vec_mean", args, 1, "vec")
+      graft.fn.VecPoolAgg(args.head, mean = true)
+    }),
+    fn("vec_sum", classOf[graft.fn.VecPoolAgg], args => {
+      arity("vec_sum", args, 1, "vec")
+      graft.fn.VecPoolAgg(args.head, mean = false)
+    }),
+    fn("topk_freq", classOf[graft.fn.SpaceSavingTopK], {
+      case Seq(item, cap, k) =>
+        graft.fn.SpaceSavingTopK(item, litInt(cap, "capacity"), litInt(k, "k"))
+      case Seq(item, w, cap, k) =>
+        graft.fn.SpaceSavingTopK(item, w, litInt(cap, "capacity"), litInt(k, "k"))
+      case other => throw new IllegalArgumentException(
+        s"topk_freq expects (item[, weight], capacity, k); got ${other.size} args")
+    }),
+    // span fixed to the 60-bit order-hash convention: pair with
+    // conv(substr(md5(x), 1, 15), 16, 10) (Sketches.orderHash)
+    fn("kmv_distinct", classOf[graft.fn.KmvDistinct], args => {
+      arity("kmv_distinct", args, 2, "hash60, k")
+      graft.fn.KmvDistinct(args(0), litInt(args(1), "k"), graft.ext.Sketches.OrderHashSpan)
+    }),
+    // width fixed to the 60-bit order-hash convention, like kmv_distinct
+    fn("hll_distinct", classOf[graft.fn.HllDistinct], args => {
+      arity("hll_distinct", args, 2, "hash60, p")
+      graft.fn.HllDistinct(args(0), litInt(args(1), "p"), 60)
+    }),
     // SimHash distance: composition of codegen built-ins, no custom kernel
-    binaryFn("hamming64",
-      classOf[org.apache.spark.sql.catalyst.expressions.BitwiseCount],
-      (a, b) => org.apache.spark.sql.catalyst.expressions.BitwiseCount(
-        org.apache.spark.sql.catalyst.expressions.BitwiseXor(a, b))))
+    fn("hamming64", classOf[BitwiseCount], args => {
+      arity("hamming64", args, 2, "a, b")
+      BitwiseCount(BitwiseXor(args(0), args(1)))
+    }))
 
   /** Register the same functions on an ALREADY-RUNNING session (the
     * extensions config only applies at session construction).
@@ -433,14 +110,11 @@ object GraftExtensions {
   object ZeroDistanceRule extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
       plan.transformAllExpressions {
-        case VincentyKm(lat1, lon1, lat2, lon2)
+        case KernelCall(Kernels.VincentyKm, Seq(lat1, lon1, lat2, lon2), _)
             if lat1.semanticEquals(lat2) && lon1.semanticEquals(lon2) &&
                lat1.deterministic && lon1.deterministic =>
           // null-preserving: 0.0 only when both coords are non-null
-          org.apache.spark.sql.catalyst.expressions.If(
-            org.apache.spark.sql.catalyst.expressions.Or(
-              org.apache.spark.sql.catalyst.expressions.IsNull(lat1),
-              org.apache.spark.sql.catalyst.expressions.IsNull(lon1)),
+          If(Or(IsNull(lat1), IsNull(lon1)),
             Literal(null, DoubleType),
             Literal(0.0, DoubleType))
       }

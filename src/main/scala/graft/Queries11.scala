@@ -163,7 +163,7 @@ object Queries11 extends ColumnSyntax {
   private def q125p(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     q125pAssets(s).select($"vid_id".as("id"),
-        explode(gb.column(graft.fn.Mp4KeyframeDhashes(
+        explode(gb.column(graft.fn.Kernels.Mp4KeyframeDhashes(
           gb.expression($"content"), 4))).as("dhash"))
       .distinct()
       .coalesce(1)

@@ -25,7 +25,7 @@ object Queries13 extends ColumnSyntax {
   import org.apache.spark.sql.{graftbridge => gb}
 
   private[graft] def htmlTextCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    gb.column(graft.fn.HtmlText(gb.expression(c)))
+    gb.column(graft.fn.Kernels.HtmlText(gb.expression(c)))
 
   // ------------------------------------------- shared HTML template
   private[graft] val H1 = "<!DOCTYPE html><html lang=\""
@@ -169,7 +169,7 @@ object Queries13 extends ColumnSyntax {
       .where(size(split($"text_out", " ")) >= 20)
     // 4. PII scrub (counts + sequential redaction, one pii_scan kernel)
     val scrub = ext.select($"doc_id", $"url",
-        gb.column(graft.fn.PiiScan(gb.expression($"text_out"))).as("__p"))
+        gb.column(graft.fn.Kernels.PiiScan(gb.expression($"text_out"))).as("__p"))
       .select($"doc_id", $"url",
         ($"__p.n_email" + $"__p.n_ipv4" + $"__p.n_phone").as("n_pii"),
         $"__p.redacted".as("redacted"))
@@ -269,7 +269,7 @@ object Queries13 extends ColumnSyntax {
       array(RobotsPaths.map(lit): _*), (d % 7 + 1).cast("int"))
     Tables.docsPar(s, dir)
       .select(d, path.as("path"),
-        gb.column(graft.fn.RobotsAllowed(gb.expression(robots),
+        gb.column(graft.fn.Kernels.RobotsAllowed(gb.expression(robots),
           gb.expression(lit("graftbot")), gb.expression(path))).as("allowed"))
       .orderBy(d)
   }

@@ -167,7 +167,7 @@ object Queries14 extends ColumnSyntax {
       lit("</body></html>"))
     Tables.docsPar(s, dir)
       .select($"doc_id",
-        gb.column(graft.fn.HtmlText(gb.expression(html), numericRefs = true))
+        gb.column(graft.fn.Kernels.HtmlTextFull(gb.expression(html)))
           .as("text_out"))
       .withColumn("n_out", length($"text_out").cast("long"))
       .orderBy($"doc_id")
@@ -179,7 +179,7 @@ object Queries14 extends ColumnSyntax {
     * responses → `html_text` extraction → token/quality gate → one
     * text record per page with its profile signals. Composes
     * [[graft.io.Warc]] (source AND sink, wire-variant encodings
-    * cycling per record), [[graft.fn.HtmlText]], and the
+    * cycling per record), [[graft.fn.Kernels.HtmlText]], and the
     * [[graft.fn.TextProfile]] kernel in ONE plan over a corpus the
     * engine writes itself — the q132 oracle-prediction pattern: docs
     * with `doc_id % 13 = 0` are written as `application/pdf` so the
@@ -211,7 +211,7 @@ object Queries14 extends ColumnSyntax {
       .select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
         Queries13.htmlTextCol(decode(col("payload"), "UTF-8")).as("text_out"))
-    val p = gb.column(graft.fn.TextProfile(gb.expression(col("text_out"))))
+    val p = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col("text_out"))))
     ext.select(col("doc_id"), col("text_out"), p.as("__p"))
       .filter(col("__p").isNotNull)
       .select(col("doc_id"), col("text_out"),
@@ -242,7 +242,7 @@ object Queries14 extends ColumnSyntax {
   // --------- q137: MP3 side-info walk, hash-gated byte round-trip
   /** The [[graft.ext.Mp3]] walker under the correctness gate: the
     * engine packs one real MPEG-1 Layer III stream per document row
-    * in-plan ([[graft.fn.Mp3Synth]] — every structural knob a
+    * in-plan ([[graft.fn.Kernels.Mp3Synth]] — every structural knob a
     * closed-form function of `doc_id`: frame count, per-frame
     * bitrate/samplerate indices, mono/stereo, padding, CRC, ID3v2
     * prefix, ID3v1 trailer, and every granule-channel's side-info
@@ -276,10 +276,10 @@ object Queries14 extends ColumnSyntax {
 
   private def q137(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val synth = gb.column(graft.fn.Mp3Synth(gb.expression($"doc_id".cast("long"))))
+    val synth = gb.column(graft.fn.Kernels.Mp3Synth(gb.expression($"doc_id".cast("long"))))
     docIds(s, dir).select($"doc_id", synth.as("mp3"))
       .select($"doc_id", $"mp3",
-        explode(array(gb.column(graft.fn.Mp3SideStats(gb.expression($"mp3"))))).as("__s"))
+        explode(array(gb.column(graft.fn.Kernels.Mp3SideStats(gb.expression($"mp3"))))).as("__s"))
       .filter($"__s".isNotNull)
       .select($"doc_id",
         $"__s.n_frames".as("n_frames"),
@@ -347,7 +347,7 @@ object Queries14 extends ColumnSyntax {
   // --------- q138: Ogg Vorbis/Opus container walk, hash-gated
   /** The [[graft.ext.Ogg]] walker under the correctness gate — the
     * q137 pattern for the Ogg container family: real pages with real
-    * CRCs packed in-plan ([[graft.fn.OggSynth]], layout exercising
+    * CRCs packed in-plan ([[graft.fn.Kernels.OggSynth]], layout exercising
     * zero-lacing terminators and cross-page packet continuation),
     * walked back CRC-verified ([[graft.fn.OggStreamMeta]]). DuckDB
     * replays the page/packet layout arithmetic, both codecs' header
@@ -356,10 +356,10 @@ object Queries14 extends ColumnSyntax {
     */
   private def q138(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val synth = gb.column(graft.fn.OggSynth(gb.expression($"doc_id".cast("long"))))
+    val synth = gb.column(graft.fn.Kernels.OggSynth(gb.expression($"doc_id".cast("long"))))
     docIds(s, dir).select($"doc_id", synth.as("ogg"))
       .select($"doc_id",
-        explode(array(gb.column(graft.fn.OggStreamMeta(gb.expression($"ogg"))))).as("__m"))
+        explode(array(gb.column(graft.fn.Kernels.OggStreamMeta(gb.expression($"ogg"))))).as("__m"))
       .filter($"__m".isNotNull)
       .select($"doc_id",
         $"__m.codec".as("codec"),
@@ -423,7 +423,7 @@ object Queries14 extends ColumnSyntax {
 
   private def q139(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val synth = gb.column(graft.fn.OggSynth(gb.expression($"doc_id".cast("long"))))
+    val synth = gb.column(graft.fn.Kernels.OggSynth(gb.expression($"doc_id".cast("long"))))
     // Fixture persistence (the q84p/q125p/q148 convention, VERDICT r11
     // item 5): packing + CRC-ing the Ogg containers is corpus
     // SYNTHESIS — work the doc_id-arithmetic oracle never does and
@@ -436,7 +436,7 @@ object Queries14 extends ColumnSyntax {
       .write.mode("overwrite").parquet(Q139OggFixture)
     s.read.parquet(Q139OggFixture)
       .select($"doc_id",
-        explode(array(gb.column(graft.fn.VorbisSetupStats(gb.expression($"ogg"))))).as("__v"))
+        explode(array(gb.column(graft.fn.Kernels.VorbisSetupStats(gb.expression($"ogg"))))).as("__v"))
       .filter($"__v".isNotNull)
       .select($"doc_id",
         $"__v.n_books".as("n_books"),
@@ -498,10 +498,10 @@ object Queries14 extends ColumnSyntax {
     */
   private def q140(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val synth = gb.column(graft.fn.OggSynth(gb.expression($"doc_id".cast("long"))))
+    val synth = gb.column(graft.fn.Kernels.OggSynth(gb.expression($"doc_id".cast("long"))))
     docIds(s, dir).select($"doc_id", synth.as("ogg"))
       .select($"doc_id",
-        explode(array(gb.column(graft.fn.VorbisSetupFull(gb.expression($"ogg"))))).as("__v"))
+        explode(array(gb.column(graft.fn.Kernels.VorbisSetupFull(gb.expression($"ogg"))))).as("__v"))
       .filter($"__v".isNotNull)
       .select($"doc_id",
         $"__v.n_floors".as("n_floors"),
@@ -593,10 +593,10 @@ object Queries14 extends ColumnSyntax {
     */
   private def q141(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val synth = gb.column(graft.fn.VorbisPcmSynth(gb.expression($"doc_id".cast("long"))))
+    val synth = gb.column(graft.fn.Kernels.VorbisPcmSynth(gb.expression($"doc_id".cast("long"))))
     docIds(s, dir).select($"doc_id", synth.as("ogg"))
       .select($"doc_id",
-        explode(array(gb.column(graft.fn.VorbisPcmStats(gb.expression($"ogg"))))).as("__v"))
+        explode(array(gb.column(graft.fn.Kernels.VorbisPcmStats(gb.expression($"ogg"))))).as("__v"))
       .filter($"__v".isNotNull)
       .select($"doc_id",
         $"__v.channels".as("channels"),
@@ -780,7 +780,7 @@ object Queries14 extends ColumnSyntax {
     docIds(s, dir)
       .select($"doc_id", plantedBytesCol($"doc_id").as("payload"))
       .select($"doc_id",
-        explode(array(gb.column(graft.fn.CharsetSniff(
+        explode(array(gb.column(graft.fn.Kernels.CharsetSniff(
           gb.expression($"payload"))))).as("__c"))
       .filter($"__c".isNotNull)
       .select($"doc_id",
@@ -860,12 +860,12 @@ object Queries14 extends ColumnSyntax {
              col("http_content_type").startsWith("text/html"))
       .select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-        explode(array(gb.column(graft.fn.CharsetSniff(
+        explode(array(gb.column(graft.fn.Kernels.CharsetSniff(
           gb.expression(col("payload")))))).as("__c"))
       .filter(col("__c").isNotNull)
       .select(col("doc_id"), col("__c.charset").as("charset"),
         Queries13.htmlTextCol(col("__c.text")).as("text_out"))
-    val p = gb.column(graft.fn.TextProfile(gb.expression(col("text_out"))))
+    val p = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col("text_out"))))
     sniffed.select(col("doc_id"), col("charset"), col("text_out"),
         explode(array(p)).as("__p"))
       .filter(col("__p").isNotNull)

@@ -74,7 +74,7 @@ object Queries15 extends ColumnSyntax {
     docIds(s, dir)
       .select(d, label.as("label"), payload.as("payload"))
       .select(d,
-        explode(array(gb.column(graft.fn.CharsetDecode(
+        explode(array(gb.column(graft.fn.Kernels.CharsetDecode(
           gb.expression($"label"), gb.expression($"payload"))))).as("__c"))
       .filter($"__c".isNotNull)
       .select(d,
@@ -131,7 +131,7 @@ object Queries15 extends ColumnSyntax {
     docIds(s, dir)
       .select(d, label.as("label"), payload.as("payload"))
       .select(d,
-        explode(array(gb.column(graft.fn.CharsetDecode(
+        explode(array(gb.column(graft.fn.Kernels.CharsetDecode(
           gb.expression($"label"), gb.expression($"payload"))))).as("__c"))
       .filter($"__c".isNotNull)
       .select(d,
@@ -222,7 +222,7 @@ object Queries15 extends ColumnSyntax {
              col("http_content_type").startsWith("text/html"))
       .select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-        explode(array(gb.column(graft.fn.CharsetDetect(
+        explode(array(gb.column(graft.fn.Kernels.CharsetDetect(
           gb.expression(col("http_content_type")),
           gb.expression(col("payload")))))).as("__c"))
       .filter(col("__c").isNotNull)
@@ -258,10 +258,10 @@ object Queries15 extends ColumnSyntax {
   // oracle replays [[graft.ext.OpusFixtures]]'s closed forms
   private def q147(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val synth = gb.column(graft.fn.OpusSynth(gb.expression($"doc_id".cast("long"))))
+    val synth = gb.column(graft.fn.Kernels.OpusSynth(gb.expression($"doc_id".cast("long"))))
     docIds(s, dir).select($"doc_id", synth.as("ogg"))
       .select($"doc_id",
-        explode(array(gb.column(graft.fn.OpusTocStats(gb.expression($"ogg"))))).as("__s"))
+        explode(array(gb.column(graft.fn.Kernels.OpusTocStats(gb.expression($"ogg"))))).as("__s"))
       .filter($"__s".isNotNull)
       .select($"doc_id",
         $"__s.channels".as("channels"),
@@ -353,7 +353,7 @@ object Queries15 extends ColumnSyntax {
   private def q148(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.{graftbridge => gb}
-    val enc = gb.column(graft.fn.VorbisEncodeSynth(gb.expression(col("doc_id").cast("long"))))
+    val enc = gb.column(graft.fn.Kernels.VorbisEncodeSynth(gb.expression(col("doc_id").cast("long"))))
     // bounded corpus (the q142 media-gate convention): the round-trip
     // gate's value is the bit-for-bit accounting, not file-sink
     // throughput — a growing sf would only multiply .ogg files
@@ -378,7 +378,7 @@ object Queries15 extends ColumnSyntax {
       .where(col("path").endsWith(".ogg"))
       .select(
         regexp_extract(col("path"), "/(\\d+)\\.ogg$", 1).cast("long").as("doc_id"),
-        explode(array(gb.column(graft.fn.VorbisPcmStats(
+        explode(array(gb.column(graft.fn.Kernels.VorbisPcmStats(
           gb.expression(col("content")))))).as("__s"))
       .filter(col("__s").isNotNull)
       .select(col("doc_id"),
@@ -465,7 +465,7 @@ object Queries15 extends ColumnSyntax {
       .select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
         regexp_extract(col("target_uri"), "^https://([^/]+)/", 1).as("host"),
-        explode(array(gb.column(graft.fn.CharsetDetect(
+        explode(array(gb.column(graft.fn.Kernels.CharsetDetect(
           gb.expression(col("http_content_type")),
           gb.expression(col("payload")))))).as("__c"))
       .filter(col("__c").isNotNull)
@@ -474,7 +474,7 @@ object Queries15 extends ColumnSyntax {
           gb.expression(col("host")), psl)).as("domain"),
         col("__c.charset").as("charset"),
         Queries13.htmlTextCol(col("__c.text")).as("text_out"))
-    val p = gb.column(graft.fn.TextProfile(gb.expression(col("text_out"))))
+    val p = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col("text_out"))))
     detected.select(col("doc_id"), col("domain"), col("charset"),
         col("text_out"), explode(array(p)).as("__p"))
       .filter(col("__p").isNotNull)

@@ -36,7 +36,7 @@ object Queries16 {
     val isHtml = d % 10 === 9 // decoys the response filter must drop
     val payload = when(isHtml,
         encode(concat(lit("<html><body>skip "), id, lit("</body></html>")), "UTF-8"))
-      .otherwise(gb.column(graft.fn.PdfSynth(gb.expression(d.cast("long")))))
+      .otherwise(gb.column(graft.fn.Kernels.PdfSynth(gb.expression(d.cast("long")))))
     val ctype = when(isHtml, lit("text/html")).otherwise(lit("application/pdf"))
     val rows = Tables.docIdsUnder(s, dir, 2000)
       .select(
@@ -56,7 +56,7 @@ object Queries16 {
              col("http_content_type") === "application/pdf")
       .select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-        explode(array(gb.column(graft.fn.PdfTextStats(
+        explode(array(gb.column(graft.fn.Kernels.PdfTextStats(
           gb.expression(col("payload")))))).as("__p"))
       .filter(col("__p").isNotNull)
       .select(col("doc_id"),
@@ -65,7 +65,7 @@ object Queries16 {
         col("__p.title").as("title"),
         col("__p.text").as("text_out"),
         col("__p.n_chars").as("n_chars"))
-    val p = gb.column(graft.fn.TextProfile(gb.expression(col("text_out"))))
+    val p = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col("text_out"))))
     extracted.select(col("doc_id"), col("n_pages"), col("n_objects"),
         col("title"), col("text_out"), col("n_chars"),
         explode(array(p)).as("__t"))
@@ -137,7 +137,7 @@ object Queries16 {
   private def q152Text(s: SparkSession): org.apache.spark.sql.Column = {
     val d = col("doc_id")
     val idx = (d * 31 + col("k") * 7 + (d - d % 13) / 13) % 12
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangId.Pools
     val word = when(d % 4 === 0,
         element_at(array(pools("en").map(lit): _*), (idx + 1).cast("int")))
       .when(d % 4 === 1,
@@ -169,7 +169,7 @@ object Queries16 {
   }
 
   private val q152Sql: String = {
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangId.Pools
     def lst(l: String) = pools(l).map(w => s"'$w'").mkString("[", ", ", "]")
     val featExprs = graft.ext.LangId.Ngrams.zipWithIndex.map { case (g, i) =>
       val ge = g.replace("'", "''")
@@ -237,9 +237,9 @@ object Queries16 {
   private def q153(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val gop = graft.fn.H264GopFrames(
-      graft.fn.Mp4MultiRefSynth(gb.expression(d.cast("long"))),
-      nBins = 4, stride = 1, maxFrames = 4)
+    val gop = graft.fn.Kernels.H264GopFrames(
+      graft.fn.Kernels.Mp4MultiRefSynth(gb.expression(d.cast("long"))),
+      4, 1, 4) // nBins, stride, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(gop)).as("__fr"))
       .select(d,
@@ -299,9 +299,9 @@ object Queries16 {
   private def q154(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val gop = graft.fn.H264GopFrames(
-      graft.fn.Mp4BGopSynth(gb.expression(d.cast("long"))),
-      nBins = 4, stride = 1, maxFrames = 4)
+    val gop = graft.fn.Kernels.H264GopFrames(
+      graft.fn.Kernels.Mp4BGopSynth(gb.expression(d.cast("long"))),
+      4, 1, 4) // nBins, stride, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(gop)).as("__fr"))
       .select(d,
@@ -361,9 +361,9 @@ object Queries16 {
   private def q155(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val gop = graft.fn.H264GopFrames(
-      graft.fn.Mp4WGopSynth(gb.expression(d.cast("long"))),
-      nBins = 4, stride = 1, maxFrames = 3)
+    val gop = graft.fn.Kernels.H264GopFrames(
+      graft.fn.Kernels.Mp4WGopSynth(gb.expression(d.cast("long"))),
+      4, 1, 3) // nBins, stride, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(gop)).as("__fr"))
       .select(d,
@@ -436,9 +436,9 @@ object Queries16 {
   private def q156(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val gop = graft.fn.H264GopFrames(
-      graft.fn.Mp4Fmp4Synth(gb.expression(d.cast("long"))),
-      nBins = 4, stride = 1, maxFrames = 4)
+    val gop = graft.fn.Kernels.H264GopFrames(
+      graft.fn.Kernels.Mp4Fmp4Synth(gb.expression(d.cast("long"))),
+      4, 1, 4) // nBins, stride, maxFrames
     // round 16: CPU-bound synth+decode kernel over a single-row-group
     // scan — spread to the core count (the q137 docIds rule; this ran
     // the whole GOP decode in ONE task)
@@ -505,7 +505,7 @@ object Queries16 {
   private def q157p(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     q157Assets(s).select(col("vid_id").as("id"),
-        explode(gb.column(graft.fn.H264GopDhashes(
+        explode(gb.column(graft.fn.Kernels.H264GopDhashes(
           gb.expression(col("content")), 4))).as("dhash"))
       .distinct()
       .coalesce(1)
@@ -555,9 +555,9 @@ object Queries16 {
   private def q158(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val gop = graft.fn.H264GopFrames(
-      graft.fn.Mp4BGopPtsSynth(gb.expression(d.cast("long"))),
-      nBins = 4, stride = 1, maxFrames = 4)
+    val gop = graft.fn.Kernels.H264GopFrames(
+      graft.fn.Kernels.Mp4BGopPtsSynth(gb.expression(d.cast("long"))),
+      4, 1, 4) // nBins, stride, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(gop)).as("__fr"))
       .select(d,
@@ -608,9 +608,9 @@ object Queries16 {
   private def q159(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val clip = graft.fn.H264ClipFrames(
-      graft.fn.Mp4BGopPtsSynth(gb.expression(d.cast("long"))),
-      nBins = 4, everyMs = 400.0, maxN = 8, maxFrames = 4)
+    val clip = graft.fn.Kernels.H264ClipFrames(
+      graft.fn.Kernels.Mp4BGopPtsSynth(gb.expression(d.cast("long"))),
+      4, 400.0, 8, 4) // nBins, everyMs, maxN, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(clip)).as("__cs"))
       .select(d,
@@ -671,7 +671,7 @@ object Queries16 {
   private def q160(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val cues = gb.column(graft.fn.SubtitleCues(graft.fn.SubtitleSynth(
+    val cues = gb.column(graft.fn.Kernels.SubtitleCues(graft.fn.Kernels.SubtitleSynth(
       gb.expression(d.cast("long")))))
     Tables.docIdsUnder(s, dir, 4000)
       .select(d, posexplode(cues).as(Seq("cue_idx", "__c")))
@@ -711,7 +711,7 @@ object Queries16 {
   private def q161(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val cues = gb.column(graft.fn.Mp4SubtitleCues(graft.fn.Mp4SubtitleSynth(
+    val cues = gb.column(graft.fn.Kernels.Mp4SubtitleCues(graft.fn.Kernels.Mp4SubtitleSynth(
       gb.expression(d.cast("long")))))
     // round 16: 4000 container walks ran in ONE task (single-row-group
     // scan, no spread) — the q137 docIds rule applies
@@ -737,13 +737,13 @@ object Queries16 {
     val label = when(d % 3 === 0, lit("utf-8"))
       .when(d % 3 === 1, lit("shift_jis"))
       .otherwise(lit("windows-1252"))
-    val dec = gb.column(graft.fn.CharsetDecode(gb.expression(label),
-      graft.fn.SubtitleEncSynth(gb.expression(d.cast("long")))))
+    val dec = gb.column(graft.fn.Kernels.CharsetDecode(gb.expression(label),
+      graft.fn.Kernels.SubtitleEncSynth(gb.expression(d.cast("long")))))
     Tables.docIdsUnder(s, dir, 3000)
       .select(d, explode(array(dec)).as("__d"))
       .filter(col("__d").isNotNull)
       .select(d, col("__d.charset").as("charset"),
-        gb.column(graft.fn.SubtitleCues(
+        gb.column(graft.fn.Kernels.SubtitleCues(
           gb.expression(col("__d.text")))).as("__cues"))
       .select(d, col("charset"), posexplode(col("__cues")).as(Seq("cue_idx", "__c")))
       .select(d, col("charset"), col("cue_idx"),

@@ -30,9 +30,9 @@ object Queries17 {
   private def q163(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val gop = graft.fn.H264GopFrames(
-      graft.fn.Mp4ElstSynth(gb.expression(d.cast("long"))),
-      nBins = 4, stride = 1, maxFrames = 4)
+    val gop = graft.fn.Kernels.H264GopFrames(
+      graft.fn.Kernels.Mp4ElstSynth(gb.expression(d.cast("long"))),
+      4, 1, 4) // nBins, stride, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(gop)).as("__fr"))
       .select(d,
@@ -85,9 +85,9 @@ object Queries17 {
   private def q164(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val clip = graft.fn.H264ClipFrames(
-      graft.fn.Mp4ElstSynth(gb.expression(d.cast("long"))),
-      nBins = 4, everyMs = 400.0, maxN = 8, maxFrames = 4)
+    val clip = graft.fn.Kernels.H264ClipFrames(
+      graft.fn.Kernels.Mp4ElstSynth(gb.expression(d.cast("long"))),
+      4, 400.0, 8, 4) // nBins, everyMs, maxN, maxFrames
     Tables.docIdsUnder(s, dir, 1000)
       .select(d, explode(gb.column(clip)).as("__cs"))
       .select(d,
@@ -158,7 +158,7 @@ object Queries17 {
   private def q165(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val cues = gb.column(graft.fn.Mp4SubtitleCues(graft.fn.Mp4TtmlSynth(
+    val cues = gb.column(graft.fn.Kernels.Mp4SubtitleCues(graft.fn.Kernels.Mp4TtmlSynth(
       gb.expression(d.cast("long")))))
     // round 16: 4000 TTML walks ran in ONE task (single-row-group
     // scan, no spread) — the q137 docIds rule applies
@@ -202,14 +202,14 @@ object Queries17 {
   private def q166Text(s: SparkSession): org.apache.spark.sql.Column = {
     val d = col("doc_id")
     val idx = ((d * 31 + col("k") * 7 + (d - d % 13) / 13) % 12 + 1).cast("int")
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangId.Pools
     val langs = graft.ext.LangId.Langs
     val chain = langs.zipWithIndex.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
       case (acc, (l, i)) =>
         val v = element_at(array(pools(l).map(lit): _*), idx)
         Some(acc.fold(when(d % 10 === i, v))(_.when(d % 10 === i, v)))
     }.get.otherwise(
-      element_at(array(graft.tools.LangIdTrain.NonePool.map(lit): _*), idx))
+      element_at(array(graft.ext.LangId.NonePool.map(lit): _*), idx))
     chain
   }
 
@@ -234,7 +234,7 @@ object Queries17 {
   }
 
   private val q166Sql: String = {
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangId.Pools
     val langs = graft.ext.LangId.Langs
     def lst(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("[", ", ", "]")
     val featExprs = graft.ext.LangId.Ngrams.zipWithIndex.map { case (g, i) =>
@@ -251,7 +251,7 @@ object Queries17 {
     val wordCase = langs.zipWithIndex.map { case (l, i) =>
       s"WHEN $i THEN list_extract(${lst(pools(l))}, idx + 1)"
     }.mkString("\n      ") +
-      s"\n      ELSE list_extract(${lst(graft.tools.LangIdTrain.NonePool)}, idx + 1)"
+      s"\n      ELSE list_extract(${lst(graft.ext.LangId.NonePool)}, idx + 1)"
     s"""WITH base AS (
        |  SELECT doc_id FROM documents WHERE doc_id < 4000
        |), wk AS (
@@ -302,7 +302,7 @@ object Queries17 {
   private def q167(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val cues = gb.column(graft.fn.WebmSubtitleCues(graft.fn.WebmSubtitleSynth(
+    val cues = gb.column(graft.fn.Kernels.WebmSubtitleCues(graft.fn.Kernels.WebmSubtitleSynth(
       gb.expression(d.cast("long")))))
     Tables.docIdsUnder(s, dir, 4000)
       .select(d, posexplode(cues).as(Seq("cue_idx", "__c")))
@@ -322,8 +322,8 @@ object Queries17 {
   private def q168(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val d = col("doc_id")
-    val blocks = gb.column(graft.fn.WebmBlockIndex(graft.fn.WebmBlockSynth(
-      gb.expression(d.cast("long"))), maxN = 64))
+    val blocks = gb.column(graft.fn.Kernels.WebmBlockIndex(graft.fn.Kernels.WebmBlockSynth(
+      gb.expression(d.cast("long"))), 64)) // maxN
     Tables.docIdsUnder(s, dir, 4000)
       .select(d, posexplode(blocks).as(Seq("block_idx", "__b")))
       .select(d, col("block_idx"),

@@ -78,7 +78,7 @@ object Queries18 {
   private def q169p(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     q169Assets(s).select($"vid_id".as("id"),
-        explode(gb.column(graft.fn.VideoKeyframeDhashes(
+        explode(gb.column(graft.fn.Kernels.VideoKeyframeDhashes(
           gb.expression($"content"), 8))).as("dhash"))
       .distinct()
       .coalesce(1)
@@ -127,8 +127,8 @@ object Queries18 {
   // the hash (the q131/q160 discipline).
   private def q170(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    val blocks = gb.column(graft.fn.JustextBlocks(
-      graft.fn.JustextSynth(gb.expression(d.cast("long")))))
+    val blocks = gb.column(graft.fn.Kernels.JustextBlocks(
+      graft.fn.Kernels.JustextSynth(gb.expression(d.cast("long")))))
     Tables.docIdsUnder(s, dir, 2000)
       .select(d, explode(blocks).as("__b"))
       .select(d, col("__b.block_idx").as("block_idx"),
@@ -175,8 +175,8 @@ object Queries18 {
   private def q171(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
     Tables.docIdsUnder(s, dir, 2000)
-      .select(d, gb.column(graft.fn.MainText(
-        graft.fn.JustextSynth(gb.expression(d.cast("long"))))).as("main_text"))
+      .select(d, gb.column(graft.fn.Kernels.MainText(
+        graft.fn.Kernels.JustextSynth(gb.expression(d.cast("long"))))).as("main_text"))
       .orderBy(d)
   }
 
@@ -201,8 +201,8 @@ object Queries18 {
   // form breaks the hash.
   private def q172(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    val m = gb.column(graft.fn.Av1Meta(
-      graft.fn.Av1Synth(gb.expression(d.cast("long")))))
+    val m = gb.column(graft.fn.Kernels.Av1Meta(
+      graft.fn.Kernels.Av1Synth(gb.expression(d.cast("long")))))
     Tables.docIdsUnder(s, dir, 2000)
       .select(d, m.as("__m"))
       .select(d,
@@ -244,8 +244,8 @@ object Queries18 {
     val d = col("doc_id")
     val base = Tables.tbl(s, dir, "documents").select(d).where(d < 2000)
     val masters = base.where(d % 2 === 0)
-      .select(d, posexplode(gb.column(graft.fn.HlsVariants(
-        graft.fn.M3u8Synth(gb.expression(d.cast("long")))))).as(Seq("idx", "__v")))
+      .select(d, posexplode(gb.column(graft.fn.Kernels.HlsVariants(
+        graft.fn.Kernels.M3u8Synth(gb.expression(d.cast("long")))))).as(Seq("idx", "__v")))
       .select(d, col("idx"), lit("variant").as("kind"),
         col("__v.bandwidth").as("bandwidth"),
         col("__v.width").as("width"), col("__v.height").as("height"),
@@ -253,8 +253,8 @@ object Queries18 {
         lit(null).cast("long").as("seq"),
         lit(null).cast("double").as("duration"))
     val medias = base.where(d % 2 === 1)
-      .select(d, posexplode(gb.column(graft.fn.HlsSegments(
-        graft.fn.M3u8Synth(gb.expression(d.cast("long")))))).as(Seq("idx", "__s")))
+      .select(d, posexplode(gb.column(graft.fn.Kernels.HlsSegments(
+        graft.fn.Kernels.M3u8Synth(gb.expression(d.cast("long")))))).as(Seq("idx", "__s")))
       .select(d, col("idx"), lit("segment").as("kind"),
         lit(null).cast("long").as("bandwidth"),
         lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
@@ -294,8 +294,8 @@ object Queries18 {
   private def q174(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
     Tables.docIdsUnder(s, dir, 2000)
-      .select(d, posexplode(gb.column(graft.fn.MpdRepresentations(
-        graft.fn.MpdSynth(gb.expression(d.cast("long")))))).as(Seq("idx", "__r")))
+      .select(d, posexplode(gb.column(graft.fn.Kernels.MpdRepresentations(
+        graft.fn.Kernels.MpdSynth(gb.expression(d.cast("long")))))).as(Seq("idx", "__r")))
       .select(d, col("idx"),
         col("__r.period").as("period"), col("__r.rep_id").as("rep_id"),
         col("__r.mime").as("mime"), col("__r.codecs").as("codecs"),
@@ -338,8 +338,8 @@ object Queries18 {
   // ANY accumulation order, so rms replays bit-identically.
   private def q175(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    val p = gb.column(graft.fn.AudioProfile(
-      graft.fn.AudioProfileSynth(gb.expression(d.cast("long")))))
+    val p = gb.column(graft.fn.Kernels.AudioProfile(
+      graft.fn.Kernels.AudioProfileSynth(gb.expression(d.cast("long")))))
     Tables.docIdsUnder(s, dir, 2000)
       .select(d, p.as("__p"))
       .select(d,

@@ -20,12 +20,12 @@ object Queries19 {
   // doc_id arithmetic the oracle replays.
   private def q176(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    val avif = gb.column(graft.fn.AvifSynth(gb.expression(d.cast("long"))))
+    val avif = gb.column(graft.fn.Kernels.AvifSynth(gb.expression(d.cast("long"))))
     Tables.docIdsUnder(s, dir, 2000)
       .select(d, avif.as("__b"))
       .select(d,
-        gb.column(graft.fn.ImageDims(gb.expression(col("__b")))).as("__d"),
-        gb.column(graft.fn.ImageCodecProfile(gb.expression(col("__b"))))
+        gb.column(graft.fn.Kernels.ImageDims(gb.expression(col("__b")))).as("__d"),
+        gb.column(graft.fn.Kernels.ImageCodecProfile(gb.expression(col("__b"))))
           .as("__c"))
       .select(d,
         col("__d.format").as("format"),
@@ -114,7 +114,7 @@ object Queries19 {
     }
     s.createDataFrame(segRows).toDF("uri", "content")
       .select($"uri",
-        explode(gb.column(graft.fn.VideoKeyframeDhashes(
+        explode(gb.column(graft.fn.Kernels.VideoKeyframeDhashes(
           gb.expression($"content"), 8))).as("dhash"))
       .coalesce(1)
       .write.mode("overwrite").parquet(Q177HashFixture)
@@ -128,12 +128,12 @@ object Queries19 {
           yield (s"t$t/r$r.m3u8", mediaText(t, r))))
       .toDF("self_uri", "text")
     val variants = masters
-      .select($"title", posexplode(gb.column(graft.fn.HlsVariants(
+      .select($"title", posexplode(gb.column(graft.fn.Kernels.HlsVariants(
         gb.expression($"text")))).as(Seq("rend", "__v")))
       .select($"title", $"rend", $"__v.uri".as("media_uri"),
         $"__v.bandwidth".as("bandwidth"))
     val segments = medias
-      .select($"self_uri", posexplode(gb.column(graft.fn.HlsSegments(
+      .select($"self_uri", posexplode(gb.column(graft.fn.Kernels.HlsSegments(
         gb.expression($"text")))).as(Seq("seg_idx", "__s")))
       .select($"self_uri", $"seg_idx", $"__s.uri".as("seg_uri"))
     val linked = variants
@@ -187,7 +187,7 @@ object Queries19 {
   // block-walk, or decode-core divergence breaks the hash.
   private def q178(s: SparkSession, dir: String): DataFrame = {
     val d = col("doc_id")
-    val m = gb.column(graft.fn.WebmVorbisAgree(gb.expression(d.cast("long"))))
+    val m = gb.column(graft.fn.Kernels.WebmVorbisAgree(gb.expression(d.cast("long"))))
     // Round 16: this query shipped without the two conventions every
     // other synth+decode query uses, and paid for both — the
     // single-row-group scan ran the double-carriage decode of all 500

@@ -147,7 +147,7 @@ object Queries8 extends ColumnSyntax {
 
   // -------------------------------- q104: winnowing fingerprints
   /** Winnowing fingerprints (k=5-token shingles, w=4 windows) for
-    * doc_id < 400 — the [[graft.fn.WinnowFingerprints]] narrow
+    * doc_id < 400 — the [[graft.fn.Kernels.WinnowFingerprints]] narrow
     * kernel vs an oracle that rebuilds shingle hashes with
     * list_slice + md5 and takes window minima with a ROWS frame.
     * Short docs (fewer shingles than the window) contribute their
@@ -261,7 +261,7 @@ object Queries8 extends ColumnSyntax {
     import org.apache.spark.sql.{graftbridge => gb}
     val toks = docsPar(s, dir)
       .select($"source",
-        explode(gb.column(graft.fn.TermCounts(gb.expression($"text"))))
+        explode(gb.column(graft.fn.Kernels.TermCounts(gb.expression($"text"))))
           .as(Seq("tok", "tf")))
     toks.groupBy($"source")
       .agg(Sketches.kmvDistinct($"tok", KmvK).as("est"))
@@ -302,7 +302,7 @@ object Queries8 extends ColumnSyntax {
     import org.apache.spark.sql.{graftbridge => gb}
     val toks = docsPar(s, dir)
       .select($"source",
-        explode(gb.column(graft.fn.TermCounts(gb.expression($"text"))))
+        explode(gb.column(graft.fn.Kernels.TermCounts(gb.expression($"text"))))
           .as(Seq("tok", "tf")))
     toks.groupBy($"source")
       .agg(Sketches.kmvDistinct($"tok", KmvK, xx = true).as("est"))
@@ -611,7 +611,7 @@ object Queries8 extends ColumnSyntax {
     val nDocs = s2.groupBy($"source").agg(count(lit(1)).as("n_docs"))
     val est = s2
       .select($"source",
-        explode(gb.column(graft.fn.TermCounts(gb.expression($"text"))))
+        explode(gb.column(graft.fn.Kernels.TermCounts(gb.expression($"text"))))
           .as(Seq("tok", "tf")))
       .groupBy($"source")
       .agg(round(Sketches.kmvDistinct($"tok", KmvK), 4).as("n_tok_est"))

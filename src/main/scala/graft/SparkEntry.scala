@@ -23,7 +23,7 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all ++ Queries2.all ++ Queries3.all ++ Queries4.all ++ Queries5.all ++
       Queries6.all ++ Queries7.all ++ Queries8.all ++ Queries9.all ++
       Queries10.all ++ Queries11.all ++ Queries12.all ++ Queries13.all ++
@@ -33,7 +33,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     Queries.oracles ++ Queries2.oracles ++ Queries3.oracles ++ Queries4.oracles ++
       Queries5.oracles ++ Queries6.oracles ++ Queries7.oracles ++ Queries8.oracles ++
       Queries9.oracles ++ Queries10.oracles ++ Queries11.oracles ++

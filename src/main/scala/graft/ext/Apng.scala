@@ -7,7 +7,7 @@ package graft.ext
   * scanline filters, so the [[Png]] inflate/unfilter kernel applies
   * per frame. (inter-coded H.264-in-MP4 frames stay behind the documented stub —
   * that codec genuinely isn't available here; MP4 container METADATA
-  * is real via [[graft.fn.Mp4Meta]].)
+  * is real via [[graft.fn.Kernels.Mp4Meta]].)
   *
   * Format (public APNG spec, now part of the W3C PNG 3 draft): a
   * standard PNG whose `acTL` chunk declares an animation; each frame

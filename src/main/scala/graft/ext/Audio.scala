@@ -173,7 +173,7 @@ object Audio {
   def withFingerprint(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("afp",
-      gb.column(graft.fn.AudioFingerprint64(gb.expression(col(contentCol)))))
+      gb.column(graft.fn.Kernels.AudioFingerprint64(gb.expression(col(contentCol)))))
   }
 
   /** Audio near-duplicate pairs `(a_id, b_id, hamming)` — the SAME

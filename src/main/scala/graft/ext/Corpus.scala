@@ -46,7 +46,7 @@ object Corpus {
                           n: Int = 8): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val distinctSh = array_distinct(
-      gb.column(graft.fn.WordShingles(gb.expression(col(textCol)), n)))
+      gb.column(graft.fn.Kernels.WordShingles(gb.expression(col(textCol)), n)))
     val benchSh = Dedup.shingles(
         bench.select(lit(0L).as("__bid"), col(benchTextCol)),
         "__bid", benchTextCol, n)
@@ -79,8 +79,8 @@ object Corpus {
                                 k: Int = 8, w: Int = 4,
                                 xx: Boolean = false): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val fpsCol = gb.column(graft.fn.WinnowFingerprints(
-      gb.expression(col(textCol)), k, w, xx))
+    val fpsCol = gb.column(graft.fn.Kernels.winnow(xx)(
+      gb.expression(col(textCol)), k, w))
     val benchFps = Dedup.winnowFingerprints(
         bench.select(lit(0L).as("__bid"), col(benchTextCol)),
         "__bid", benchTextCol, k, w, xx)

@@ -156,7 +156,7 @@ object Dedup {
     shingleStream(docs, idCol, textCol, n).distinct()
 
   /** Non-distinct shingle stream (one row per shingle OCCURRENCE) via
-    * the native [[graft.fn.WordShingles]] codegen kernel — the n-gram
+    * the native [[graft.fn.Kernels.WordShingles]] codegen kernel — the n-gram
     * array is computed in one pass per document INSIDE the scan
     * stage's codegen span and exploded directly: NO shuffle at all.
     * Formulation history (all measured): posexplode + lead-window
@@ -171,7 +171,7 @@ object Dedup {
   def shingleStream(docs: DataFrame, idCol: String, textCol: String,
                     n: Int = 3): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val grams = gb.column(graft.fn.WordShingles(gb.expression(col(textCol)), n))
+    val grams = gb.column(graft.fn.Kernels.WordShingles(gb.expression(col(textCol)), n))
     docs.select(col(idCol), explode(grams).as("shingle"))
   }
 
@@ -189,7 +189,7 @@ object Dedup {
       .select(col(idCol), array((0 until k).map(i => col(s"__h$i")): _*).as("sig"))
   }
 
-  /** Per-ROW MinHash signatures via the native [[graft.fn.MinhashSig]]
+  /** Per-ROW MinHash signatures via the native [[graft.fn.Kernels.MinhashSig]]
     * kernel: (idCol, sig) computed inside the scan's codegen span —
     * NO explode, NO groupBy, NO shuffle. Bit-identical to
     * [[minhashSignatures]] with [[XxHasher]] (DedupSpec asserts);
@@ -203,7 +203,7 @@ object Dedup {
                        n: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     docs.select(col(idCol),
-        gb.column(graft.fn.MinhashSig(gb.expression(col(textCol)), n, k)).as("sig"))
+        gb.column(graft.fn.Kernels.MinhashSig(gb.expression(col(textCol)), n, k)).as("sig"))
       .filter(col("sig").isNotNull)
   }
 
@@ -227,7 +227,7 @@ object Dedup {
   /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
     * 2003 — MOSS): (idCol, fp) rows, fp = the distinct w-window
     * minima of the doc's k-shingle 60-bit md5 hashes (the
-    * [[graft.fn.WinnowFingerprints]] narrow kernel; see there for
+    * [[graft.fn.Kernels.WinnowFingerprints]] narrow kernel; see there for
     * the ≥ k+w−1 shared-run detection guarantee). The selected
     * density is ~2/(w+1) of shingles — the fingerprint table a
     * shared-span / plagiarism join runs on at a fraction of the full
@@ -244,8 +244,8 @@ object Dedup {
                          k: Int = 5, w: Int = 4, xx: Boolean = false): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     docs.select(col(idCol),
-        gb.column(graft.fn.WinnowFingerprints(
-          gb.expression(col(textCol)), k, w, xx)).as("__fps"))
+        gb.column(graft.fn.Kernels.winnow(xx)(
+          gb.expression(col(textCol)), k, w)).as("__fps"))
       .filter(col("__fps").isNotNull)
       .select(col(idCol), explode(col("__fps")).as("fp"))
   }

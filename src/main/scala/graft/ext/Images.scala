@@ -192,12 +192,12 @@ object Images {
   }
 
   /** `dhash` column (nullable long) via the native
-    * [[graft.fn.ImageDhash64]] codegen expression.
+    * [[graft.fn.Kernels.ImageDhash64]] codegen expression.
     */
   def withDhash(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("dhash",
-      gb.column(graft.fn.ImageDhash64(gb.expression(col(contentCol)))))
+      gb.column(graft.fn.Kernels.ImageDhash64(gb.expression(col(contentCol)))))
   }
 
   /** Perceptual near-duplicate image pairs:

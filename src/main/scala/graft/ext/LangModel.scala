@@ -11,7 +11,7 @@ import org.apache.spark.sql.{graftbridge => gb}
   * model-based variant as a first-class operator).
   *
   * Scale shape: TRAINING is one vocabulary-sized shuffle — the
-  * [[graft.fn.TermCounts]] kernel builds each doc's (tok → tf) map
+  * [[graft.fn.Kernels.TermCounts]] kernel builds each doc's (tok → tf) map
   * inside the scan span, so the exchange carries per-doc DISTINCT
   * tokens, not the token stream — and SCORING is a narrow per-row
   * kernel over a broadcast vocabulary ([[graft.fn.UnigramNll]]):
@@ -32,7 +32,7 @@ object LangModel {
   /** Corpus unigram counts (tok, cnt), cnt = total occurrences. */
   def unigramCounts(docs: DataFrame, textCol: String): DataFrame =
     docs
-      .select(explode(gb.column(graft.fn.TermCounts(gb.expression(col(textCol)))))
+      .select(explode(gb.column(graft.fn.Kernels.TermCounts(gb.expression(col(textCol)))))
         .as(Seq("tok", "tf")))
       .groupBy(col("tok"))
       .agg(sum(col("tf")).as("cnt"))
@@ -108,7 +108,7 @@ object LangModel {
     val denom = lit(total.toDouble + alpha * vocab.toDouble)
     docs
       .select(col(idCol),
-        explode(gb.column(graft.fn.TermCounts(gb.expression(col(textCol)))))
+        explode(gb.column(graft.fn.Kernels.TermCounts(gb.expression(col(textCol)))))
           .as(Seq("tok", "tf")))
       .join(counts, Seq("tok"), "left")
       .groupBy(col(idCol))
@@ -132,7 +132,7 @@ object LangModel {
   /** Corpus n-gram counts keyed by component columns — history never
     * crosses document boundaries. The exchange carries per-doc
     * DISTINCT grams with map-side partial sums
-    * ([[graft.fn.NgramCounts]] builds each doc's gram→tf map inside
+    * ([[graft.fn.Kernels.NgramCounts]] builds each doc's gram→tf map inside
     * the scan span); the former posexplode + element_at form
     * hash-partitioned the corpus's entire token stream once per
     * model order — at sf1 that was most of Stupid-Backoff training.
@@ -140,7 +140,7 @@ object LangModel {
   private def ngramCountsDf(docs: DataFrame, textCol: String, n: Int,
                             parts: Seq[String]): DataFrame = {
     val split_ = docs
-      .select(explode(gb.column(graft.fn.NgramCounts(
+      .select(explode(gb.column(graft.fn.Kernels.NgramCounts(
           gb.expression(col(textCol)), n)))
         .as(Seq("__g", "__tf")))
       .groupBy(col("__g"))

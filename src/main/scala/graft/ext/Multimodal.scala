@@ -86,7 +86,7 @@ object Multimodal {
   /** REAL image features: PNG payloads are pixel-decoded JDK-only
     * (inflate IDAT → unfilter → Rec.601 luminance; [[Png]]) and
     * summarized as [mean, std, nBins-histogram] — via the
-    * [[graft.fn.PngGrayFeatures]] native expression, inside
+    * [[graft.fn.Kernels.PngGrayFeatures]] native expression, inside
     * whole-stage codegen, no UDF. Rows whose payload is not a
     * decodable PNG get null features (callers route them to
     * [[withFeatureStub]] or a future codec).
@@ -95,13 +95,13 @@ object Multimodal {
                       contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("features",
-      gb.column(graft.fn.PngGrayFeatures(gb.expression(col(contentCol)), nBins)))
+      gb.column(graft.fn.Kernels.PngGrayFeatures(gb.expression(col(contentCol)), nBins)))
   }
 
   /** REAL audio features: RIFF PCM payloads are sample-decoded
     * JDK-only (chunk walk → channel-averaged samples; [[Wav]]) into
     * [channels, sample_rate, bits, n_frames, rms, mean, peak,
-    * zero_cross_rate] — via the [[graft.fn.WavPcmFeatures]] native
+    * zero_cross_rate] — via the [[graft.fn.Kernels.WavPcmFeatures]] native
     * expression, inside whole-stage codegen, no UDF. Non-WAV rows get
     * null features.
     */
@@ -109,7 +109,7 @@ object Multimodal {
                       contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("features",
-      gb.column(graft.fn.WavPcmFeatures(gb.expression(col(contentCol)))))
+      gb.column(graft.fn.Kernels.WavPcmFeatures(gb.expression(col(contentCol)))))
   }
 
   /** Typed WAV metadata (sample format + duration), derived from the
@@ -119,7 +119,7 @@ object Multimodal {
     */
   def withWavMeta(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val f = gb.column(graft.fn.WavPcmFeatures(gb.expression(col(contentCol))))
+    val f = gb.column(graft.fn.Kernels.WavPcmFeatures(gb.expression(col(contentCol))))
     assets.withColumn("meta",
       when(f.isNotNull, struct(
         element_at(f, 1).cast("int").as("channels"),
@@ -132,7 +132,7 @@ object Multimodal {
 
   /** Typed MP4/QuickTime metadata: major brand (ftyp leading box, the
     * overwhelmingly common layout, via codegen substring) + the
-    * [[graft.fn.Mp4Meta]] box walk (timescale, duration, track
+    * [[graft.fn.Kernels.Mp4Meta]] box walk (timescale, duration, track
     * count). MJPEG tracks additionally decode REAL frames
     * ([[withMjpegFrames]]); H.264 tracks decode their KEYFRAMES
     * ([[H264]], [[withKeyframeDhash]], CAVLC and CABAC I) AND their
@@ -143,14 +143,14 @@ object Multimodal {
     * remaining stub surface is CABAC P/B slices, MMCO, explicit
     * reference-list modification, and poc_type ≠ 0 — and metadata
     * is fully real:
-    * [[graft.fn.Mp4AvcMeta]] surfaces SPS-derived resolution/profile
-    * and [[graft.fn.Mp4SyncOffsets]] the keyframe byte index, like
+    * [[graft.fn.Kernels.Mp4AvcMeta]] surfaces SPS-derived resolution/profile
+    * and [[graft.fn.Kernels.Mp4SyncOffsets]] the keyframe byte index, like
     * PNG's IHDR and WAV's fmt.
     */
   def withMp4Meta(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val c = col(contentCol)
-    val m = gb.column(graft.fn.Mp4Meta(gb.expression(c)))
+    val m = gb.column(graft.fn.Kernels.Mp4Meta(gb.expression(c)))
     assets.withColumn("meta",
       when(m.isNotNull, struct(
         when(substring(c, 5, 4).cast("string") === "ftyp",
@@ -165,7 +165,7 @@ object Multimodal {
     * `stride`-th frame (of the first `maxFrames`) is decoded —
     * per-frame inflate + unfilter + canvas compositing, [[Apng]] —
     * and emitted as one ROW (frame_idx, t_ms, features) per sampled
-    * frame via the [[graft.fn.ApngFrameFeatures]] native expression +
+    * frame via the [[graft.fn.Kernels.ApngFrameFeatures]] native expression +
     * a generator: the frame-sampling row shape of [[sampleChunks]],
     * but with real pixels. The payload column is dropped BEFORE the
     * explode, so only fixed-size feature vectors fan out. Non-APNG
@@ -176,7 +176,7 @@ object Multimodal {
                      maxFrames: Int = 256,
                      contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    explodeFrames(assets, contentCol, gb.column(graft.fn.ApngFrameFeatures(
+    explodeFrames(assets, contentCol, gb.column(graft.fn.Kernels.ApngFrameFeatures(
       gb.expression(col(contentCol)), nBins, stride, maxFrames)))
   }
 
@@ -187,7 +187,7 @@ object Multimodal {
                     maxFrames: Int = 256,
                     contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    explodeFrames(assets, contentCol, gb.column(graft.fn.GifFrameFeatures(
+    explodeFrames(assets, contentCol, gb.column(graft.fn.Kernels.GifFrameFeatures(
       gb.expression(col(contentCol)), nBins, stride, maxFrames)))
   }
 
@@ -201,7 +201,7 @@ object Multimodal {
                       maxFrames: Int = 256,
                       contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    explodeFrames(assets, contentCol, gb.column(graft.fn.MjpegFrameFeatures(
+    explodeFrames(assets, contentCol, gb.column(graft.fn.Kernels.MjpegFrameFeatures(
       gb.expression(col(contentCol)), nBins, stride, maxFrames)))
   }
 
@@ -219,12 +219,12 @@ object Multimodal {
     import org.apache.spark.sql.{graftbridge => gb}
     val c = gb.expression(col(contentCol))
     explodeFrames(assets, contentCol, coalesce(
-      gb.column(graft.fn.ApngFrameFeatures(c, nBins, stride, maxFrames)),
-      gb.column(graft.fn.GifFrameFeatures(c, nBins, stride, maxFrames)),
-      gb.column(graft.fn.MjpegFrameFeatures(c, nBins, stride, maxFrames)),
+      gb.column(graft.fn.Kernels.ApngFrameFeatures(c, nBins, stride, maxFrames)),
+      gb.column(graft.fn.Kernels.GifFrameFeatures(c, nBins, stride, maxFrames)),
+      gb.column(graft.fn.Kernels.MjpegFrameFeatures(c, nBins, stride, maxFrames)),
       // round 8: baseline H.264 tracks sample their KEYFRAMES for
       // real (frame_idx = keyframe ordinal, t_ms from stts)
-      gb.column(graft.fn.H264KeyframeFrames(c, nBins, stride, maxFrames))))
+      gb.column(graft.fn.Kernels.H264KeyframeFrames(c, nBins, stride, maxFrames))))
   }
 
   /** Shared explode: frames array → (frame_idx, t_ms, features) rows,
@@ -251,15 +251,15 @@ object Multimodal {
   def withFeatures(assets: DataFrame, nBins: Int = 16, stubDim: Int = 16,
                    contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val png = gb.column(graft.fn.PngGrayFeatures(gb.expression(col(contentCol)), nBins))
-    val jpg = gb.column(graft.fn.JpegGrayFeatures(gb.expression(col(contentCol)), nBins))
-    val wav = gb.column(graft.fn.WavPcmFeatures(gb.expression(col(contentCol))))
+    val png = gb.column(graft.fn.Kernels.PngGrayFeatures(gb.expression(col(contentCol)), nBins))
+    val jpg = gb.column(graft.fn.Kernels.JpegGrayFeatures(gb.expression(col(contentCol)), nBins))
+    val wav = gb.column(graft.fn.Kernels.WavPcmFeatures(gb.expression(col(contentCol))))
     // round 9: FLAC rides the round-9 frame decoder into the same
     // audio feature contract as WAV
-    val flac = gb.column(graft.fn.FlacPcmFeatures(gb.expression(col(contentCol))))
+    val flac = gb.column(graft.fn.Kernels.FlacPcmFeatures(gb.expression(col(contentCol))))
     // round 8: baseline H.264 keyframes are REAL pixels now — only
     // payloads no decoder claims fall through to the stub
-    val kf = gb.column(graft.fn.Mp4KeyframeFeatures(gb.expression(col(contentCol)), nBins))
+    val kf = gb.column(graft.fn.Kernels.Mp4KeyframeFeatures(gb.expression(col(contentCol)), nBins))
     val seed = xxhash64(col(contentCol))
     val stub = array((0 until stubDim).map { i =>
       (pmod(xxhash64(lit(i), seed), lit(2000000L)).cast("double") / 1000000.0 - 1.0)
@@ -271,14 +271,14 @@ object Multimodal {
     * luma-decoded JDK-only (Huffman entropy decode → dequant → IDCT
     * of the Y plane; [[Jpeg]]) into the same [mean, std, histogram]
     * contract as [[withPngFeatures]] — via the
-    * [[graft.fn.JpegGrayFeatures]] native expression. Non-JPEG or
+    * [[graft.fn.Kernels.JpegGrayFeatures]] native expression. Non-JPEG or
     * out-of-scope profiles (arithmetic, 12-bit, CMYK) get null features; baseline AND progressive decode.
     */
   def withJpegFeatures(assets: DataFrame, nBins: Int = 16,
                        contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("features",
-      gb.column(graft.fn.JpegGrayFeatures(gb.expression(col(contentCol)), nBins)))
+      gb.column(graft.fn.Kernels.JpegGrayFeatures(gb.expression(col(contentCol)), nBins)))
   }
 
   /** Deterministic feature extraction over binary payloads with NO
@@ -333,7 +333,7 @@ object Multimodal {
   def withWebmMeta(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("webm_meta",
-      gb.column(graft.fn.WebmMeta(gb.expression(col(contentCol)))))
+      gb.column(graft.fn.Kernels.WebmMeta(gb.expression(col(contentCol)))))
   }
 
   /** Typed FLAC STREAMINFO metadata column ([[Flac]]): rate,
@@ -342,7 +342,7 @@ object Multimodal {
   def withFlacMeta(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("flac_meta",
-      gb.column(graft.fn.FlacMeta(gb.expression(col(contentCol)))))
+      gb.column(graft.fn.Kernels.FlacMeta(gb.expression(col(contentCol)))))
   }
 
   /** Full-GOP frame sampling for baseline H.264 (I+P) tracks — the
@@ -355,7 +355,7 @@ object Multimodal {
                     maxFrames: Int = 256,
                     contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    explodeFrames(assets, contentCol, gb.column(graft.fn.H264GopFrames(
+    explodeFrames(assets, contentCol, gb.column(graft.fn.Kernels.H264GopFrames(
       gb.expression(col(contentCol)), nBins, stride, maxFrames)))
   }
 
@@ -368,7 +368,7 @@ object Multimodal {
   def withKeyframeDhash(assets: DataFrame, contentCol: String = "content"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     assets.withColumn("kf_dhash",
-      gb.column(graft.fn.Mp4KeyframeDhash64(gb.expression(col(contentCol)))))
+      gb.column(graft.fn.Kernels.Mp4KeyframeDhash64(gb.expression(col(contentCol)))))
   }
 
   /** Video near-duplicate pairs over keyframe dHashes — the SAME
@@ -393,7 +393,7 @@ object Multimodal {
         // video; pairs sharing ANY near keyframe surface, reduced to
         // their best (minimum) hamming
         assets.select(col(idCol).as("id"),
-            explode(gb.column(graft.fn.Mp4KeyframeDhashes(
+            explode(gb.column(graft.fn.Kernels.Mp4KeyframeDhashes(
               gb.expression(col(contentCol)), maxKeyframes))).as("dhash"))
           .distinct()
     if (maxKeyframes == 1) Images.nearDupPairsFromHashes(hashed, maxHamming, bands)
@@ -402,7 +402,7 @@ object Multimodal {
 
   /** ANY-FRAME video near-duplicate pairs: every decoded frame of
     * the full I/P/B GOP indexes its video
-    * ([[graft.fn.H264GopDhashes]] — DPB, multi-ref, bi-prediction,
+    * ([[graft.fn.Kernels.H264GopDhashes]] — DPB, multi-ref, bi-prediction,
     * weighted prediction all run), then the shared multi-hash pair
     * stage. This is the re-encode shape keyframe matching cannot
     * catch: a clip cut mid-GOP shares no keyframe with its source
@@ -414,7 +414,7 @@ object Multimodal {
                                 maxFrames: Int = 16): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val hashed = assets.select(col(idCol).as("id"),
-        explode(gb.column(graft.fn.H264GopDhashes(
+        explode(gb.column(graft.fn.Kernels.H264GopDhashes(
           gb.expression(col(contentCol)), maxFrames))).as("dhash"))
       .distinct()
     nearDupPairsFromMultiHashes(hashed, maxHamming, bands)
@@ -477,7 +477,7 @@ object Multimodal {
                              maxKeyframes: Int = 8): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     val hashed = assets.select(col(idCol).as("id"),
-        explode(gb.column(graft.fn.VideoKeyframeDhashes(
+        explode(gb.column(graft.fn.Kernels.VideoKeyframeDhashes(
           gb.expression(col(contentCol)), maxKeyframes))).as("dhash"))
       .distinct()
     nearDupPairsFromMultiHashes(hashed, maxHamming, bands)

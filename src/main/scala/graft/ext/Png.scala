@@ -13,7 +13,7 @@ import java.util.zip.Inflater
   * Unsupported profiles (16-bit, Adam7 interlace, sub-byte palette)
   * return None rather than wrong pixels.
   *
-  * The kernel is called from the [[graft.fn.PngGrayFeatures]] native
+  * The kernel is called from the [[graft.fn.Kernels.PngGrayFeatures]] native
   * expression — per-row imperative decode stays a static JVM method
   * inside the whole-stage codegen span, the same pattern as
   * VincentyKm/VecKernels (no ScalaUDF span break).

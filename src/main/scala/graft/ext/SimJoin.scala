@@ -55,7 +55,7 @@ object SimJoin {
     * dominated the round-2 bench; an explicit 64-term element_at sum
     * tree was 50× slower still (16 planes × 64 terms blow the codegen
     * method budget → interpreted tree walk). The
-    * [[graft.fn.ArrayDotProduct]] expression is a single static call
+    * [[graft.fn.Kernels.ArrayDotProduct]] expression is a single static call
     * to a JIT-compiled primitive loop inside the codegen span.
     */
   def dotConst(v: Column, plane: Seq[Double]): Column =
@@ -66,7 +66,7 @@ object SimJoin {
     */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.{graftbridge => gb}
-    gb.column(graft.fn.ArrayDotProduct(gb.expression(a), gb.expression(b)))
+    gb.column(graft.fn.Kernels.ArrayDotProduct(gb.expression(a), gb.expression(b)))
   }
 
   /** Cosine similarity of two array columns (not assumed normalized):
@@ -75,7 +75,7 @@ object SimJoin {
     */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.{graftbridge => gb}
-    gb.column(graft.fn.CosineSim(gb.expression(a), gb.expression(b)))
+    gb.column(graft.fn.Kernels.CosineSim(gb.expression(a), gb.expression(b)))
   }
 
   /** Bucket table: (idCol, band, code) — b rows per vector, where
@@ -254,7 +254,7 @@ object SimJoin {
       .filter(col(idCol) =!= col("q_id"))
       .withColumn("cos_sim", {
         import org.apache.spark.sql.{graftbridge => gb}
-        gb.column(graft.fn.CosineSimQ8(gb.expression(col("__qv")),
+        gb.column(graft.fn.Kernels.CosineSimQ8(gb.expression(col("__qv")),
           gb.expression(col("__q")), gb.expression(col("__scale"))))
       })
     val w = org.apache.spark.sql.expressions.Window
@@ -346,7 +346,7 @@ object SimJoin {
     */
   def int8Scale(v: Column): Column = {
     import org.apache.spark.sql.{graftbridge => gb}
-    gb.column(graft.fn.Int8Scale(gb.expression(v)))
+    gb.column(graft.fn.Kernels.Int8Scale(gb.expression(v)))
   }
 
   /** Symmetric int8 quantization of a double-array embedding under a
@@ -364,7 +364,7 @@ object SimJoin {
     */
   def quantizeInt8(v: Column, scale: Column): Column = {
     import org.apache.spark.sql.{graftbridge => gb}
-    gb.column(graft.fn.QuantizeInt8(gb.expression(v), gb.expression(scale)))
+    gb.column(graft.fn.Kernels.QuantizeInt8(gb.expression(v), gb.expression(scale)))
   }
 
   /** Reconstruct the double array a quantized vector represents:

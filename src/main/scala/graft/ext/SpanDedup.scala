@@ -17,7 +17,7 @@ import org.apache.spark.sql.{graftbridge => gb}
   * least one duplicated window), which distributes as ONE
   * hash-keyed aggregate:
   *
-  *  1. scan: [[graft.fn.CharWindowHashes]] hashes every window inside
+  *  1. scan: [[graft.fn.Kernels.CharWindowHashes]] hashes every window inside
   *     the scan's codegen span — the only stage that touches every
   *     corpus byte, and it moves none of them;
   *  2. exchange on the 8-byte window hash with map-side combine →
@@ -50,7 +50,7 @@ object SpanDedup {
                    L: Int, xx: Boolean = false): DataFrame =
     docs
       .select(col(idCol), posexplode(gb.column(
-          graft.fn.CharWindowHashes(gb.expression(col(textCol)), L, xx)))
+          graft.fn.Kernels.charWindows(xx)(gb.expression(col(textCol)), L)))
         .as(Seq("__i", "h")))
       .select(col(idCol), (col("__i") + 1).cast("long").as("pos"), col("h"))
 
@@ -125,7 +125,7 @@ object SpanDedup {
                        maxSize: Long = 10000000L): graft.fn.LongHashSet = {
     val rows = ref
       .select(explode(gb.column(
-          graft.fn.CharWindowHashes(gb.expression(col(textCol)), L, xx)))
+          graft.fn.Kernels.charWindows(xx)(gb.expression(col(textCol)), L)))
         .as("h"))
       .distinct()
       // clamp before toInt: maxSize >= Int.MaxValue would overflow the
@@ -161,7 +161,7 @@ object SpanDedup {
     * (docs without spans pass through untouched). Adds `cleanCol`
     * next to the original columns. Spans collect to a per-doc sorted
     * array — bounded by doc_length / (L+1), the same order as the
-    * text itself — and [[graft.fn.StripCharSpans]] rewrites the row
+    * text itself — and [[graft.fn.Kernels.StripCharSpans]] rewrites the row
     * in one compiled pass.
     *
     * Note the paper's semantics, kept here: ALL occurrences of a
@@ -181,7 +181,7 @@ object SpanDedup {
     docs.join(spans, Seq(idCol), "left")
       .withColumn(cleanCol,
         when(col("__sp").isNull, col(textCol))
-          .otherwise(gb.column(graft.fn.StripCharSpans(
+          .otherwise(gb.column(graft.fn.Kernels.StripCharSpans(
             gb.expression(col(textCol)),
             gb.expression(col("__sp.span_start")),
             gb.expression(col("__sp.span_end"))))))

@@ -27,7 +27,7 @@ object TextOps {
       explode(array_remove(split(col(textCol), " "), "")).as("tok"))
 
   /** The (idCol, tok, tf) term-frequency table computed with NO
-    * corpus shuffle: the [[graft.fn.TermCounts]] kernel builds each
+    * corpus shuffle: the [[graft.fn.Kernels.TermCounts]] kernel builds each
     * document's `map<tok, count>` inside the scan's codegen span and
     * the map explodes directly — bit-identical rows to
     * `tokens(…).groupBy(idCol, tok).count()` (TextOpsSpec asserts),
@@ -39,7 +39,7 @@ object TextOps {
     import org.apache.spark.sql.{graftbridge => gb}
     docs
       .select(col(idCol),
-        explode(gb.column(graft.fn.TermCounts(gb.expression(col(textCol)))))
+        explode(gb.column(graft.fn.Kernels.TermCounts(gb.expression(col(textCol)))))
           .as(Seq("tok", "tf")))
   }
 
@@ -101,7 +101,7 @@ object TextOps {
     */
   def profileNarrow(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val p = gb.column(graft.fn.TextProfile(gb.expression(col(textCol))))
+    val p = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col(textCol))))
     docs.select(col(idCol), p.as("__p"))
       .filter(col("__p").isNotNull)
       .select(col(idCol), col("__p.*"))
@@ -119,7 +119,7 @@ object TextOps {
     */
   def repetitionSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val p = gb.column(graft.fn.RepetitionProfile(gb.expression(col(textCol))))
+    val p = gb.column(graft.fn.Kernels.RepetitionProfile(gb.expression(col(textCol))))
     docs.select(col(idCol), p.as("__r"))
       .filter(col("__r").isNotNull)
       .select(col(idCol), col("__r.*"))
@@ -138,7 +138,7 @@ object TextOps {
     * text with each occurrence replaced by a typed placeholder
     * (`<EMAIL>`/`<IP>`/`<PHONE>`, replaced in that order — the email
     * pattern can contain dotted digits, so it must be consumed before
-    * the IPv4 pass reads the text). One [[graft.fn.PiiScan]] kernel
+    * the IPv4 pass reads the text). One [[graft.fn.Kernels.PiiScan]] kernel
     * per row (round 9): the previous six `java.util.regex` passes
     * (three counts + the replace chain) were 4.8× slower than the
     * RE2 oracle at sf10; the hand-compiled scanners do the same work
@@ -150,7 +150,7 @@ object TextOps {
     import org.apache.spark.sql.{graftbridge => gb}
     docs
       .select(col(idCol),
-        gb.column(graft.fn.PiiScan(gb.expression(col(textCol)))).as("__p"))
+        gb.column(graft.fn.Kernels.PiiScan(gb.expression(col(textCol)))).as("__p"))
       .select(col(idCol),
         col("__p.n_email").as("n_email"),
         col("__p.n_ipv4").as("n_ipv4"),
@@ -200,7 +200,7 @@ object TextOps {
     * docs matching at least one query token.
     *
     * Scale shape — the query is a LITERAL token list, so retrieval
-    * needs NO corpus-keyed shuffle at all: the [[graft.fn.TermCounts]]
+    * needs NO corpus-keyed shuffle at all: the [[graft.fn.Kernels.TermCounts]]
     * kernel builds each doc's tf map inside the scan span and the
     * per-token tf columns are O(1) map probes on it (whole-stage
     * codegen's subexpression elimination evaluates the kernel once
@@ -218,7 +218,7 @@ object TextOps {
     require(query.nonEmpty, "bm25 needs at least one query token")
     import org.apache.spark.sql.{graftbridge => gb}
     val qs = query.distinct
-    val tc = gb.column(graft.fn.TermCounts(gb.expression(col(textCol))))
+    val tc = gb.column(graft.fn.Kernels.TermCounts(gb.expression(col(textCol))))
     val perDoc = docs.select(
       (col(idCol) +:
         size(array_remove(split(col(textCol), " "), "")).as("__dl") +:

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{graftbridge => gb}
   *
   * Scale shape: the WHOLE corpus contributes through ONE aggregate
   * pass — each row derives its packed upper-triangle outer product
-  * inside the scan span ([[graft.fn.VecOuterUpper]], d(d+1)/2 doubles
+  * inside the scan span ([[graft.fn.Kernels.VecOuterUpper]], d(d+1)/2 doubles
   * for dim d) and [[SimJoin.vecSum]] reduces with map-side partials,
   * so the driver receives exactly (1 + d + d(d+1)/2) doubles no
   * matter how many rows flowed. Eigen-decomposition happens on the

@@ -14,7 +14,7 @@ package graft.ext
   * correctly. Anything else (ADPCM, float64, truncated payloads)
   * returns null — callers route those rows to the stub path.
   *
-  * Used by [[graft.fn.WavPcmFeatures]] inside whole-stage codegen: the
+  * Used by [[graft.fn.Kernels.WavPcmFeatures]] inside whole-stage codegen: the
   * per-row call is a static JIT-compiled loop, same pattern as
   * [[Png.grayFeaturesOrNull]].
   */

@@ -1,45 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** SQL `justext_blocks(html)` — per-block boilerplate classification
-  * ([[graft.ext.Boilerplate.classify]], the published jusText rules):
-  * (block_idx, heading, length, link_chars, stop_hits, n_words,
-  * cf_class, class, text) per structural block. Null for null input;
-  * an empty page yields an empty array.
-  */
-case class JustextBlocks(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = JustextBlocks.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "justext_blocks"
-
-  override protected def nullSafeEval(v: Any): Any =
-    JustextBlocks.blocksData(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_b =
-         |  graft.fn.JustextBlocks.blocksData($html);
-         |if (${ev.value}_b == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_b;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object JustextBlocks {
   val Schema: DataType = ArrayType(StructType(Seq(
@@ -64,59 +28,3 @@ object JustextBlocks {
   }
 }
 
-/** SQL `main_text(html)` — the page's MAIN text (final-class-good
-  * blocks joined with newlines, [[graft.ext.Boilerplate.mainTextOrNull]]):
-  * the de-boilerplated face of `html_text` for dedup/LM gates.
-  */
-case class MainText(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "main_text"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val t = graft.ext.Boilerplate.mainTextOrNull(v.asInstanceOf[UTF8String].toString)
-    if (t == null) null else UTF8String.fromString(t)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |String ${ev.value}_t = graft.ext.Boilerplate.mainTextOrNull($html.toString());
-         |if (${ev.value}_t == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(${ev.value}_t);
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `justext_synth(doc_id)` — the q170/q171 page corpus
-  * ([[graft.ext.BoilerplateFixtures.fixtureHtml]]): every block
-  * parameter is doc_id arithmetic mirrored by the oracle.
-  */
-case class JustextSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def prettyName: String = "justext_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(
-      graft.ext.BoilerplateFixtures.fixtureHtml(id.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.ext.BoilerplateFixtures.fixtureHtml($id));")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

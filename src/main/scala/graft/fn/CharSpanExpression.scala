@@ -1,54 +1,11 @@
 package graft.fn
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** SQL `char_windows(text)` — the hash of every L-char window of the
-  * row ([[TextKernels.charWindowHashes]]), the fingerprint stream of
-  * exact-substring duplicate detection (Lee et al. 2022). A narrow
-  * codegen expression: windows are hashed inside the scan's codegen
-  * span, so the exchange that follows carries 8-byte hashes — never
-  * the L-char substrings themselves (at L = 40 that is a 5×
-  * shuffle-byte reduction before compression, and the only part of
-  * this operator that touches every corpus byte stays on the scan
-  * side).
-  *
-  * `xx = true` selects the xxhash64 production hasher (SQL
-  * `char_windows_xx`): same windows, same positions, cheaper hash —
-  * the md5 default exists for DuckDB oracle parity.
-  */
-case class CharWindowHashes(child: Expression, L: Int, xx: Boolean = false)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(L >= 2, s"window length must be >= 2 chars, got $L")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = if (xx) "char_windows_xx" else "char_windows"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.charWindowHashes(s.asInstanceOf[UTF8String], L, xx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-         |  graft.fn.TextKernels.charWindowHashes($s, $L, $xx);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 /** Open-addressing primitive long set (load ≤ 0.5, linear probe) —
   * the broadcast side of the streaming substring-contamination
@@ -318,34 +275,3 @@ case class IslandAgg(
     copy(child = newChild)
 }
 
-/** SQL `strip_char_spans(text, starts, ends)` — remove the 1-based
-  * inclusive char spans [starts(i), ends(i)] (sorted, non-overlapping)
-  * from the text ([[TextKernels.stripCharSpans]]). The APPLY half of
-  * exact-substring dedup: spans arrive as per-doc arrays (bounded by
-  * doc length / span length — the same order as the text column), so
-  * the rewrite is one compiled pass per row with no shuffle of its
-  * own.
-  */
-case class StripCharSpans(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(StringType, ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "strip_char_spans"
-
-  override protected def nullSafeEval(s: Any, st: Any, en: Any): Any =
-    TextKernels.stripCharSpans(s.asInstanceOf[UTF8String],
-      st.asInstanceOf[ArrayData], en.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, st, en) =>
-      s"""
-         |${ev.value} = graft.fn.TextKernels.stripCharSpans($s, $st, $en);
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, sec: Expression, t: Expression): Expression =
-    copy(first = f, second = sec, third = t)
-}

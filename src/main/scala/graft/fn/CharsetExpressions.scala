@@ -1,44 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** `charset_sniff(content)` — [[graft.ext.Charsets]] BOM + strict
-  * UTF-8 + windows-1252 sniffing/decoding as a per-row codegen
-  * kernel: the crawl payload's bytes → (detected charset, decoded
-  * text, code-point count). Null only for null input.
-  */
-case class CharsetSniff(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = CharsetSniff.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "charset_sniff"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    CharsetSniff.rowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.CharsetSniff.rowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object CharsetSniff {
   val Schema: StructType = StructType(Seq(
@@ -59,89 +24,12 @@ object CharsetSniff {
       d.text.codePointCount(0, d.text.length)))
 }
 
-/** `charset_decode(label, content)` — labeled decode through
-  * [[graft.ext.CharsetFamilies]]: BOM wins, then the WHATWG-
-  * normalized label routes to the family scanner, unknown/empty
-  * labels fall through to the strict-UTF-8 → windows-1252 sniff.
-  * The empty string means "no label" (callers pass
-  * `coalesce(label, lit(""))` — the kernel keeps Spark's standard
-  * null-in/null-out inputs so codegen stays on the nullSafe path).
-  */
-case class CharsetDecode(label: Expression, content: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def left: Expression = label
-  override def right: Expression = content
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, BinaryType)
-  override def dataType: DataType = CharsetSniff.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "charset_decode"
-
-  override protected def nullSafeEval(l: Any, c: Any): Any =
-    CharsetDecode.rowOrNull(l.toString, c.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, c) =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.CharsetDecode.rowOrNull($l.toString(), $c);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(label = newLeft, content = newRight)
-}
-
 object CharsetDecode {
   def rowOrNull(label: String, bytes: Array[Byte]): InternalRow = {
     val d = graft.ext.CharsetFamilies.decodeLabeled(
       if (label == null || label.isEmpty) null else label, bytes)
     if (d == null) null else CharsetSniff.toRow(d)
   }
-}
-
-/** `charset_detect(content_type, content)` — the FULL WHATWG
-  * authority chain ([[graft.ext.CharsetFamilies.detectDecode]]):
-  * BOM → Content-Type `charset=` parameter → `<meta>` prescan over
-  * the first 1024 bytes → strict UTF-8 → windows-1252. This is the
-  * kernel that sits between [[graft.io.Warc]] responses and the
-  * text layer; the empty string means "no Content-Type header".
-  */
-case class CharsetDetect(contentType: Expression, content: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def left: Expression = contentType
-  override def right: Expression = content
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, BinaryType)
-  override def dataType: DataType = CharsetSniff.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "charset_detect"
-
-  override protected def nullSafeEval(ct: Any, c: Any): Any =
-    CharsetDetect.rowOrNull(ct.toString, c.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ct, c) =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.CharsetDetect.rowOrNull($ct.toString(), $c);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(contentType = newLeft, content = newRight)
 }
 
 object CharsetDetect {

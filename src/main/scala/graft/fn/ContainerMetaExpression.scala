@@ -1,8 +1,6 @@
 package graft.fn
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.AbstractDataType
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,82 +29,6 @@ object ContainerMetaKernels {
   }
 }
 
-/** SQL `webm_meta(content)` — WebM/Matroska container metadata from
-  * an EBML walk ([[graft.ext.Webm]]): doc type, duration, first
-  * video track's codec + PIXEL dimensions, first audio track's codec
-  * + rate/channels. Null for non-EBML payloads.
-  */
-case class WebmMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("doc_type", StringType),
-    StructField("duration_sec", DoubleType),
-    StructField("video_codec", StringType),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("audio_codec", StringType),
-    StructField("sample_rate", DoubleType),
-    StructField("channels", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "webm_meta"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    ContainerMetaKernels.webmRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.ContainerMetaKernels.webmRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `flac_meta(content)` — FLAC STREAMINFO metadata
-  * ([[graft.ext.Flac]]): sample rate, channels, bits/sample, total
-  * samples, duration. Null for non-FLAC payloads.
-  */
-case class FlacMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("bits_per_sample", IntegerType, nullable = false),
-    StructField("total_samples", LongType, nullable = false),
-    StructField("duration_sec", DoubleType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "flac_meta"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    ContainerMetaKernels.flacRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.ContainerMetaKernels.flacRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MediaMetaKernels {
   def imageDimsRowOrNull(bytes: Array[Byte]): GenericInternalRow = {
     val m = graft.ext.MediaMeta.imageDimsOrNull(bytes)
@@ -131,110 +53,3 @@ object MediaMetaKernels {
   }
 }
 
-/** SQL `image_codec_profile(content)` — codec-level still triage
-  * ([[graft.ext.MediaMeta.imageCodecProfileOrNull]]): the av1C
-  * (codec, profile, bit_depth, monochrome) of an AVIF/HEIF-carried
-  * AV1 item, so corpus gates can filter on codec capability BEFORE
-  * any decode.  Null for non-ISOBMFF stills.
-  */
-case class ImageCodecProfile(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("codec", StringType, nullable = false),
-    StructField("profile", LongType, nullable = false),
-    StructField("bit_depth", LongType, nullable = false),
-    StructField("monochrome", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_codec_profile"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    MediaMetaKernels.imageCodecProfileRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.MediaMetaKernels.imageCodecProfileRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `image_dims(content)` — format-routed still-image dimensions
-  * ([[graft.ext.MediaMeta.imageDimsOrNull]]: PNG/JPEG/GIF/BMP/WebP/
-  * TIFF/AVIF/HEIC by content magic). The resolution-triage verb that
-  * needs NO decode. Null for unrecognized payloads.
-  */
-case class ImageDims(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_dims"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    MediaMetaKernels.imageDimsRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.MediaMetaKernels.imageDimsRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `audio_meta(content)` — format-routed audio metadata
-  * ([[graft.ext.MediaMeta.audioMetaOrNull]]: WAV/FLAC/MP3/Ogg by
-  * content magic): (format, sample_rate, channels, duration_sec —
-  * null when the container can't prove one).
-  */
-case class AudioMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("duration_sec", DoubleType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_meta"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    MediaMetaKernels.audioMetaRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.MediaMetaKernels.audioMetaRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

@@ -110,14 +110,14 @@ object GeoFns {
   val vincentyKm: UserDefinedFunction =
     udf(vincentyKmScala _).asNonNullable()
 
-  /** [[VincentyKm]] native-expression Column API: same math as the
+  /** [[Kernels.VincentyKm]] native-expression Column API: same math as the
     * UDF, but codegen'd inline (no closure invocation, no span break).
     * Also registered as SQL `vincenty_km` via graft.GraftExtensions.
     */
   def vincentyKmNative(lat1: Column, lon1: Column,
                        lat2: Column, lon2: Column): Column = {
     import org.apache.spark.sql.{graftbridge => gb}
-    gb.column(VincentyKm(gb.expression(lat1), gb.expression(lon1),
+    gb.column(Kernels.VincentyKm(gb.expression(lat1), gb.expression(lon1),
       gb.expression(lat2), gb.expression(lon2)))
   }
 

@@ -1,71 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-
-/** `mp3_synth(doc_id)` — the deterministic MPEG-1 Layer III stream of
-  * [[graft.ext.Mp3Fixtures]] as a per-row codegen kernel (q137's
-  * corpus: the engine packs real frame bytes in-plan, then reads them
-  * back with the [[graft.ext.Mp3]] walker; the oracle predicts both
-  * ends from `doc_id` alone).
-  */
-case class Mp3Synth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "mp3_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.Mp3Fixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.Mp3Fixtures.stream($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `mp3_side_stats(content)` — the [[graft.ext.Mp3]] side-info walk
-  * folded to integer-exact per-stream statistics (frame count, CRC
-  * frames, bitrate/samplerate/`main_data_begin` sums, the
-  * `global_gain` sum/min/max over every granule-channel, and the
-  * window-switching granule-channel count). Every field is an exact
-  * integer so a SQL oracle replays it with no float tolerance; null
-  * when the payload is not a walkable MPEG-1 Layer III stream.
-  */
-case class Mp3SideStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = Mp3SideStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "mp3_side_stats"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    Mp3SideStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.Mp3SideStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object Mp3SideStats {
   val Schema: StructType = StructType(Seq(

@@ -1,10 +1,6 @@
 package graft.fn
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Binary-search 1-D nearest-neighbor lookup — the kernel behind
   * [[graft.ops.NearestJoin.nearest1d]].
@@ -18,6 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * the DuckDB oracle compute — in O(log m) per row instead of O(m).
   */
 object Nearest1d {
+  /** [[nearestKey]], null for an empty axis. */
+  def nearestKeyOrNull(x: Double, vals: ArrayData, keys: ArrayData): java.lang.Long =
+    if (vals.numElements() == 0) null
+    else java.lang.Long.valueOf(nearestKey(x, vals, keys))
+
   def nearestKey(x: Double, vals: ArrayData, keys: ArrayData): Long = {
     val n = vals.numElements()
     // first index with vals(i) >= x
@@ -38,36 +39,3 @@ object Nearest1d {
   }
 }
 
-/** SQL-facing expression: `Nearest1dKey(x, sortedVals, keys)` → key of
-  * the nearest axis value (null on null/empty inputs). Codegen is one
-  * static call to the binary-search kernel inside the fused span.
-  */
-case class Nearest1dKey(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(DoubleType, ArrayType(DoubleType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "nearest1d_key"
-
-  override protected def nullSafeEval(x: Any, vals: Any, keys: Any): Any = {
-    val v = vals.asInstanceOf[ArrayData]
-    if (v.numElements() == 0) null
-    else Nearest1d.nearestKey(x.asInstanceOf[Double], v, keys.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, vals, keys) =>
-      s"""
-         |if ($vals.numElements() == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.fn.Nearest1d.nearestKey($x, $vals, $keys);
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}

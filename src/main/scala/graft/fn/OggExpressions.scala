@@ -1,106 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** `ogg_synth(doc_id)` — the deterministic Ogg Vorbis/Opus container
-  * of [[graft.ext.OggFixtures]] as a per-row codegen kernel (q138's
-  * corpus; the q137 pattern).
-  */
-case class OggSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "ogg_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.OggFixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.OggFixtures.stream($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `ogg_stream_meta(content)` — the CRC-verified [[graft.ext.Ogg]]
-  * walk (pages + packet reassembly + Vorbis/Opus header parse) folded
-  * to oracle-exact fields: codec, channels, rate, pre-skip, page and
-  * packet counts, the final granule position, the duration it implies
-  * (integer milliseconds at the codec's granule rate — 48 kHz for
-  * Opus), comment count, vendor string, and the total audio payload
-  * bytes after the header packets. Null for anything that is not a
-  * well-formed single-stream Ogg Vorbis/Opus container.
-  */
-case class OggStreamMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = OggStreamMeta.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "ogg_stream_meta"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    OggStreamMeta.metaOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.OggStreamMeta.metaOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `vorbis_setup_stats(content)` — the [[graft.ext.VorbisSetup]]
-  * codebook parse (LSB-first bitpack, sync, ordered/sparse length
-  * lists, canonical first-fit codeword assembly, Kraft completeness,
-  * VQ lookup tables) folded to oracle-exact integers. `cw_sum` is the
-  * sum of every assigned canonical codeword value — the direct gate
-  * on the assembly trie. Null for anything that is not a well-formed
-  * Ogg VORBIS container (Opus has no Vorbis setup).
-  */
-case class VorbisSetupStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VorbisSetupStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "vorbis_setup_stats"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    VorbisSetupStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.VorbisSetupStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object VorbisSetupStats {
   val Schema: StructType = StructType(Seq(
@@ -139,43 +42,6 @@ object VorbisSetupStats {
       s.codebooks.length, dims, entries, used, maxLen,
       lookups, lv, cw, complete))
   }
-}
-
-/** `vorbis_setup_full(content)` — the COMPLETE setup-header parse
-  * ([[graft.ext.VorbisSetup.fullSetupOrNull]]: codebooks, time
-  * transforms, floor 0/1 configurations, residue cascades, channel
-  * mappings with coupling steps, modes, closing framing bit) folded
-  * to oracle-exact integers. With this, a conformant Vorbis stream's
-  * entire DECODE CONFIGURATION is validated in-plan; the remaining
-  * round-11 lift is pure signal path (floor curve synthesis, residue
-  * decode, MDCT). Null for non-Vorbis containers or any setup the
-  * spec declares undecodable.
-  */
-case class VorbisSetupFull(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VorbisSetupFull.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "vorbis_setup_full"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    VorbisSetupFull.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.VorbisSetupFull.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object VorbisSetupFull {
@@ -263,47 +129,6 @@ object OggStreamMeta {
   * per-row codegen kernel (q141's corpus; the q137/q138 pattern
   * extended to the audio signal path).
   */
-/** `webm_vorbis_agree(doc_id)` — the WebM `A_VORBIS` carriage check
-  * (round 15, verdict item 9): rebuilds the q141 fixture stream, laces
-  * its three headers into a WebM CodecPrivate with one SimpleBlock
-  * per audio packet ([[graft.ext.WebmFixtures.vorbisWebm]]), decodes
-  * BOTH carriages through the shared [[graft.ext.VorbisDecode]] core
-  * ([[graft.ext.Webm.vorbisPcmOrNull]] for the WebM side) and reports
-  * `[rate, channels, pcm_samples, agree]` where `agree` = 1 iff the
-  * WebM PCM covers the Ogg PCM sample-for-sample on every channel
-  * (Matroska carries no granule, so the WebM side may extend past the
-  * Ogg trim). The oracle pins rate/channels/pcm_samples to the q141
-  * closed forms and `agree` to 1 — any carriage divergence flips the
-  * flag and breaks the hash.
-  */
-case class WebmVorbisAgree(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "webm_vorbis_agree"
-
-  override protected def nullSafeEval(id: Any): Any = {
-    val r = WebmVorbisAgree.eval(id.asInstanceOf[Long])
-    if (r == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"""
-         |long[] ${ev.value}_r = graft.fn.WebmVorbisAgree.eval($id);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_r);
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object WebmVorbisAgree {
   def eval(id: Long): Array[Long] = {
@@ -334,63 +159,6 @@ object WebmVorbisAgree {
     Array(po.sampleRate.toLong, po.channels.toLong, po.nSamples.toLong,
       if (agree) 1L else 0L)
   }
-}
-
-case class VorbisPcmSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "vorbis_pcm_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VorbisPcmFixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VorbisPcmFixtures.stream($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `vorbis_pcm_stats(content)` — the complete
-  * [[graft.ext.VorbisDecode]] audio decode (Huffman over the
-  * stream's own books, floor-1 posts, residue, coupling, floor curve,
-  * IMDCT, window, overlap-add) folded to its INTEGER-EXACT stage
-  * accounting: decoded packet count, floor post sum, residue lattice
-  * sum (pre-coupling; exact because the fixtures' books carry
-  * integral min/delta/multiplicands), the §7.2.4 integer curve sum,
-  * and the lapped PCM sample count after granule trim. Null for
-  * anything that is not a decodable single-stream Ogg Vorbis
-  * container.
-  */
-case class VorbisPcmStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VorbisPcmStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "vorbis_pcm_stats"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    VorbisPcmStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.VorbisPcmStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object VorbisPcmStats {

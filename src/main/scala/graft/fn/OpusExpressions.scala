@@ -1,71 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-
-/** `opus_synth(doc_id)` — the deterministic Ogg Opus container of
-  * [[graft.ext.OpusFixtures]] as a per-row codegen kernel (q147's
-  * corpus; the q137/q138 pattern).
-  */
-case class OpusSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "opus_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.OpusFixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.OpusFixtures.stream($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `opus_toc_stats(content)` — the RFC 6716 §3 packet-structure walk
-  * of [[graft.ext.Opus]] (TOC byte, the four frame-packing codes,
-  * 1/2-byte frame-length coding, 255-chained padding, the [R1]–[R7]
-  * structural rules) over a CRC-verified Ogg Opus container, folded
-  * to oracle-exact integers: packet/frame counts, total duration in
-  * 48 kHz samples, TOC-byte sum, frame-payload and padding byte
-  * accounting, VBR packet count, and the SILK/Hybrid/CELT mode
-  * split. Null for anything that is not a structurally valid Ogg
-  * Opus stream.
-  */
-case class OpusTocStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = OpusTocStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "opus_toc_stats"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    OpusTocStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.OpusTocStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object OpusTocStats {
   val Schema: StructType = StructType(Seq(

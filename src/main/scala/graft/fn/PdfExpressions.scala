@@ -1,70 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** `pdf_synth(doc_id)` — the deterministic [[graft.ext.PdfFixtures]]
-  * document as a per-row codegen kernel (q151's corpus; the q137
-  * OggSynth pattern).
-  */
-case class PdfSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "pdf_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.PdfFixtures.pdf(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.PdfFixtures.pdf($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `pdf_text(content)` — the [[graft.ext.Pdf]] restricted-subset
-  * extraction (xref tables + xref/object streams, FlateDecode +
-  * predictors, page tree, content-stream text operators, WinAnsi/
-  * Standard/ToUnicode decoding) folded to (page count, in-use object
-  * count, /Info /Title, extracted text, code-point count). Null for
-  * anything the subset cannot prove it extracted correctly —
-  * malformed, encrypted, unsupported filter. Never throws.
-  */
-case class PdfTextStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = PdfTextStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "pdf_text"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    PdfTextStats.rowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.PdfTextStats.rowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object PdfTextStats {
   val Schema: StructType = StructType(Seq(

@@ -1,48 +1,6 @@
 package graft.fn
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Per-row Gopher repetition signals as a native codegen expression —
-  * SQL `repetition_profile(text)`. One
-  * [[TextKernels.repetitionProfile]] call per row inside the
-  * whole-stage codegen span returns the top-{2,3,4}-gram and
-  * duplicated-{5,6}-gram character-fraction struct with NO explode
-  * and NO aggregation shuffle: repetition is a property of one
-  * document, so at 100 TB it must be computed where the document
-  * already is. Null for texts with no tokens. Signal definitions and
-  * the tie-break/occurrence-sum conventions are documented on the
-  * kernel (Rae et al. 2021 Table A1 lineage).
-  */
-case class RepetitionProfile(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = RepetitionProfile.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "repetition_profile"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.repetitionProfile(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.TextKernels.repetitionProfile($s);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object RepetitionProfile {
   /** Field order is the `TextOps.repetitionSignals` output contract. */

@@ -1,72 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** SQL `subtitle_synth(doc_id)` — the q160 corpus
-  * ([[graft.ext.SubtitleFixtures.doc]]): id arithmetic decides
-  * WebVTT-vs-SRT and every cue's timing/text, mirrored by the
-  * oracle.
-  */
-case class SubtitleSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def prettyName: String = "subtitle_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(
-      graft.ext.SubtitleFixtures.doc(id.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  graft.ext.SubtitleFixtures.doc($id));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `subtitle_cues(text)` — WebVTT/SRT cue extraction
-  * ([[graft.ext.Subtitles.cuesOrNull]]): array of
-  * (start_ms, end_ms, text) structs in document order; null for
-  * non-subtitle content. The path by which video corpora become
-  * training text — the rows feed the same text_profile / language-ID
-  * / dedup gates as any document.
-  */
-case class SubtitleCues(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = SubtitleCues.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "subtitle_cues"
-
-  override protected def nullSafeEval(text: Any): Any =
-    SubtitleCues.cuesData(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_c =
-         |  graft.fn.SubtitleCues.cuesData($text);
-         |if (${ev.value}_c == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_c;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object SubtitleCues {
   val Schema: DataType = ArrayType(StructType(Seq(
@@ -82,64 +19,6 @@ object SubtitleCues {
   }
 }
 
-/** SQL `mp4_subtitle_synth(doc_id)` — the q161 corpus
-  * ([[graft.ext.SubtitleFixtures.wvttMp4]]): the q160 cue corpus
-  * carried INSIDE MP4 wvtt tracks (classic stbl on even ids,
-  * fragmented CMAF segments on odd).
-  */
-case class Mp4SubtitleSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "mp4_subtitle_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.SubtitleFixtures.wvttMp4(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.SubtitleFixtures.wvttMp4($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `mp4_subtitle_cues(content)` — subtitle cues carried inside
-  * an MP4, BOTH ISO 14496-30 carriages (`wvtt` WebVTT and `stpp`
-  * TTML/IMSC1 — the DASH/CMAF broadcast shape), both container
-  * layouts ([[graft.ext.Avc.mp4SubtitleCuesOrNull]]): same row
-  * schema and text cleaning as [[SubtitleCues]], so in-container and
-  * standalone subtitles land identically in the text pipeline.
-  */
-case class Mp4SubtitleCues(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = SubtitleCues.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "mp4_subtitle_cues"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    Mp4SubtitleCues.cuesData(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_c =
-         |  graft.fn.Mp4SubtitleCues.cuesData($bytes);
-         |if (${ev.value}_c == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_c;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Mp4SubtitleCues {
   def cuesData(bytes: Array[Byte]): GenericArrayData = {
     val cues = graft.ext.Avc.mp4SubtitleCuesOrNull(bytes, 1 << 16)
@@ -150,51 +29,3 @@ object Mp4SubtitleCues {
   }
 }
 
-/** SQL `mp4_ttml_synth(doc_id)` — the q165 corpus
-  * ([[graft.ext.SubtitleFixtures.stppMp4]]): the q160 cue corpus as
-  * TTML documents inside MP4 `stpp` tracks (ISO 14496-30's OTHER
-  * carriage — the DASH/CMAF broadcast shape); classic per-cue
-  * samples on even ids, one fragmented whole-document sample on odd.
-  */
-case class Mp4TtmlSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "mp4_ttml_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.SubtitleFixtures.stppMp4(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.SubtitleFixtures.stppMp4($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `subtitle_enc_synth(doc_id)` — the q162 corpus
-  * ([[graft.ext.SubtitleFixtures.encodedDoc]]): WebVTT documents
-  * ENCODED in rotating legacy charsets (utf-8 / shift_jis /
-  * windows-1252) — the bytes a crawler actually fetches.
-  */
-case class SubtitleEncSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "subtitle_enc_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.SubtitleFixtures.encodedDoc(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.SubtitleFixtures.encodedDoc($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

@@ -1,45 +1,6 @@
 package graft.fn
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Per-row text profile as a native codegen expression — SQL
-  * `text_profile(text)`. One [[TextKernels.textProfile]] call per row
-  * inside the whole-stage codegen span returns the full quality
-  * struct with NO explode and NO aggregation shuffle — the narrow
-  * twin of `TextOps.profile` (bit-identical, TextOpsSpec asserts) and
-  * the stateless building block of streaming curation gates
-  * (`DocStreams.curationGate`). Null for texts with no tokens.
-  */
-case class TextProfile(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = TextProfile.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "text_profile"
-
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.textProfile(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.TextKernels.textProfile($s);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object TextProfile {
   /** Field order is the `TextOps.profile` output contract. */

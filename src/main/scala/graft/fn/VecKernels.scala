@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * (q74 7.8 s). A direct loop over the unsafe array's primitive slots
   * is JIT-compiled, allocation-free, and stays inside the whole-stage
   * codegen span as one static call — the same pattern as
-  * [[GeoFns.vincentyKmScala]] / [[VincentyKm]].
+  * [[GeoFns.vincentyKmScala]] / [[Kernels.VincentyKm]].
   *
   * Null semantics exactly mirror the HOF formulation they replace
   * (`aggregate(zip_with(a, b, _ * _), 0.0, _ + _)`): `zip_with` pads

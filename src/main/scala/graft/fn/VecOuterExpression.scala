@@ -1,9 +1,6 @@
 package graft.fn
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 
 object VecOuterKernel {
@@ -29,29 +26,3 @@ object VecOuterKernel {
   }
 }
 
-/** SQL-free codegen expression: packed upper-triangle x⊗x of a
-  * double vector — the per-row moment a single [[graft.ext.SimJoin.vecSum]]
-  * aggregate turns into a covariance matrix
-  * ([[graft.ext.VecStats.moments]]). dim d costs d(d+1)/2 doubles per
-  * row inside the scan span; the alternative (position self-explode +
-  * groupBy(i,j)) shuffles N·d² rows. Null vector → null.
-  */
-case class VecOuterUpper(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType, containsNull = false))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_outer_upper"
-
-  override protected def nullSafeEval(v: Any): Any =
-    VecOuterKernel.outerUpper(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.fn.VecOuterKernel.outerUpper($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

@@ -1,40 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-
-/** `vorbis_encode_synth(doc_id)` — deterministic two-tone PCM
-  * (closed forms of `doc_id`) pushed through the REAL
-  * [[graft.ext.VorbisEncode]] restricted encoder: forward MDCT,
-  * quantization, floor/residue bit-packing, Ogg framing. Returns the
-  * container bytes plus the encoder's own integer accounting
-  * (packet count, written residue sum, input length) — the
-  * encode-side half of the q148 round-trip gate, persisted to
-  * parquet so the oracle can read what the decode side must
-  * reproduce.
-  */
-case class VorbisEncodeSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = VorbisEncodeSynth.Schema
-  override def nullable: Boolean = false
-  override def prettyName: String = "vorbis_encode_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    VorbisEncodeSynth.row(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.fn.VorbisEncodeSynth.row($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object VorbisEncodeSynth {
   val Schema: StructType = StructType(Seq(

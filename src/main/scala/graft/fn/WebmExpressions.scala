@@ -1,69 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** SQL `webm_subtitle_synth(doc_id)` — the q167 corpus
-  * ([[graft.ext.WebmFixtures.subtitleWebm]]): the q160 cue corpus in
-  * WebM S_TEXT tracks, codec rotating by id % 3 (UTF8 / WEBVTT /
-  * ASS) with per-cue vs single-cluster layouts by id/2 parity.
-  */
-case class WebmSubtitleSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "webm_subtitle_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.WebmFixtures.subtitleWebm(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.WebmFixtures.subtitleWebm($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `webm_subtitle_cues(content)` — S_TEXT subtitle cues out of a
-  * WebM/Matroska payload ([[graft.ext.Webm.subtitleCuesOrNull]]):
-  * same (start_ms, end_ms, text) row schema and text cleaning as
-  * [[SubtitleCues]]/[[Mp4SubtitleCues]], so all three containers land
-  * identically in the text pipeline.
-  */
-case class WebmSubtitleCues(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = SubtitleCues.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "webm_subtitle_cues"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    WebmSubtitleCues.cuesData(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_c =
-         |  graft.fn.WebmSubtitleCues.cuesData($bytes);
-         |if (${ev.value}_c == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_c;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
 object WebmSubtitleCues {
   def cuesData(bytes: Array[Byte]): GenericArrayData = {
@@ -73,64 +13,6 @@ object WebmSubtitleCues {
       InternalRow(s, e, UTF8String.fromString(t)): Any
     })
   }
-}
-
-/** SQL `webm_block_synth(doc_id)` — the q168 corpus
-  * ([[graft.ext.WebmFixtures.blockWebm]]): a video track whose
-  * SimpleBlock timeline (timestamps, keyframe flags, frame sizes) is
-  * id arithmetic mirrored by the oracle.
-  */
-case class WebmBlockSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "webm_block_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.WebmFixtures.blockWebm(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.WebmFixtures.blockWebm($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `webm_block_index(content, maxN)` — the WebM triage index
-  * ([[graft.ext.Webm.blockIndexOrNull]]): (track, t_ms, keyframe,
-  * size) per block with NO codec work — parity with the MP4 side's
-  * stss/stsz walk ([[Mp4SyncOffsets]]).
-  */
-case class WebmBlockIndex(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(maxN >= 1 && maxN <= (1 << 16), s"maxN out of range: $maxN")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = WebmBlockIndex.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "webm_block_index"
-
-  override protected def nullSafeEval(bytes: Any): Any =
-    WebmBlockIndex.blocksData(bytes.asInstanceOf[Array[Byte]], maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_b =
-         |  graft.fn.WebmBlockIndex.blocksData($bytes, $maxN);
-         |if (${ev.value}_b == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_b;
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object WebmBlockIndex {
@@ -149,30 +31,6 @@ object WebmBlockIndex {
   }
 }
 
-/** SQL `vp8_webm_synth(doc_id)` — a WebM carrying one REAL VP8
-  * keyframe (32×32 seed-derived scene through the
-  * [[graft.ext.Vp8Fixtures]] encoder): the scale-smoke corpus for the
-  * full encode→container→decode→hash chain.
-  */
-case class Vp8WebmSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "vp8_webm_synth"
-
-  override protected def nullSafeEval(id: Any): Any =
-    Vp8WebmSynth.doc(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.fn.Vp8WebmSynth.doc($id);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Vp8WebmSynth {
   def doc(id: Long): Array[Byte] = {
     val h = id * 2654435761L
@@ -187,114 +45,3 @@ object Vp8WebmSynth {
   }
 }
 
-/** SQL `webm_vp8_dhashes(content, maxN)` — dHashes of the first maxN
-  * VP8 keyframes of a WebM's V_VP8 track
-  * ([[graft.ext.Webm.vp8KeyframeDhashes]]): the WebM face of the
-  * any-keyframe video near-dup index (round 14).
-  */
-case class WebmVp8Dhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(maxN >= 1 && maxN <= (1 << 12),
-    s"maxN must be in [1, 4096], got $maxN")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "webm_vp8_dhashes"
-
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Webm.vp8KeyframeDhashes(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Webm.vp8KeyframeDhashes($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `video_kf_dhashes(content, maxN)` — container-ROUTED keyframe
-  * dHashes: ftyp → the MP4/H.264 walk, EBML → the WebM/VP8 walk
-  * ([[graft.ext.Multimodal.keyframeDhashesRouted]]). One index for a
-  * mixed crawl, and the cross-container near-dup entry point (an
-  * MP4 re-encode of a WebM pairs because both hash the same rule).
-  */
-case class VideoKeyframeDhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(maxN >= 1 && maxN <= (1 << 12),
-    s"maxN must be in [1, 4096], got $maxN")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_kf_dhashes"
-
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Multimodal.keyframeDhashesRouted(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Multimodal.keyframeDhashesRouted($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQL `video_gop_dhashes(content, maxN)` — container-routed ANY-FRAME
-  * dHashes ([[graft.ext.Multimodal.gopDhashesRouted]]): EBML → all VP8
-  * keyframes, else → the full H.264 GOP (I+P+B). The streaming
-  * any-frame dedup gate's index, so one stream admits both containers.
-  */
-case class VideoGopDhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  require(maxN >= 1 && maxN <= (1 << 12),
-    s"maxN must be in [1, 4096], got $maxN")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_gop_dhashes"
-
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Multimodal.gopDhashesRouted(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Multimodal.gopDhashesRouted($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

@@ -46,7 +46,7 @@ object NearestJoin {
   }
 
   /** Big-fact × dim 1-D nearest join via a broadcast SORTED axis +
-    * per-row binary search ([[graft.fn.Nearest1dKey]]) — O(N·log m)
+    * per-row binary search ([[graft.fn.Kernels.Nearest1dKey]]) — O(N·log m)
     * with NO shuffle of the fact side at all (vs [[snapByAxis]]'s
     * O(N·m) distance evals + full-relation shuffle). The axis is
     * reduced to one row of sorted parallel arrays with a distributed
@@ -75,7 +75,7 @@ object NearestJoin {
       .agg(sort_array(collect_list(struct(col("__v"), col("__k")))).as("__s"))
       .select(col("__s.__v").as("__vals"), col("__s.__k").as("__keys"))
     df.crossJoin(broadcast(packed))
-      .withColumn(out, gb.column(graft.fn.Nearest1dKey(
+      .withColumn(out, gb.column(graft.fn.Kernels.Nearest1dKey(
         gb.expression(coord.cast("double")),
         gb.expression(col("__vals")), gb.expression(col("__keys")))))
       .drop("__vals", "__keys")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * aggregates with full map-side combine, one shuffle, constant state
   * per group regardless of group size. The (d+1)×(d+1) solve
   * `M c = T`, M[i][j] = S_{i+j}, happens per GROUP (not per row)
-  * through the native [[graft.fn.PolyfitSolve]] kernel (partial-pivot
+  * through the native [[graft.fn.Kernels.PolyfitSolve]] kernel (partial-pivot
   * Gaussian elimination) — for any sane degree the solve is
   * nanoseconds; the data never moves twice.
   *
@@ -37,7 +37,7 @@ object Polyfit {
     val mArr = array((0 to 2 * deg).map(k => col(s"__s$k")): _*)
     val tArr = array((0 to deg).map(k => col(s"__t$k")): _*)
     agg
-      .withColumn("coeffs", gb.column(graft.fn.PolyfitSolve(
+      .withColumn("coeffs", gb.column(graft.fn.Kernels.PolyfitSolve(
         gb.expression(mArr), gb.expression(tArr))))
       .drop(((0 to 2 * deg).map(k => s"__s$k") ++ (0 to deg).map(k => s"__t$k")): _*)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Streaming MinHash NEAR-duplicate filtering — the streaming face of
   * `ext/Dedup.nearDupPairs` (EventStreams covers streaming EXACT
   * dedup). Possible at all because signatures are per-row and
-  * stateless ([[graft.fn.MinhashSig]], the shuffle-free kernel): each
+  * stateless ([[graft.fn.Kernels.MinhashSig]], the shuffle-free kernel): each
   * arriving document hashes to its b LSH band buckets; a document is
   * kept iff it is the FIRST occupant of ALL its buckets within the
   * watermark horizon — i.e. dropped when it shares any bucket with an
@@ -45,7 +45,7 @@ object DocStreams {
     require(k % b == 0, s"signature length $k not divisible into $b bands")
     val r = k / b
 
-    val sig = gb.column(graft.fn.MinhashSig(gb.expression(col("text")), n, k))
+    val sig = gb.column(graft.fn.Kernels.MinhashSig(gb.expression(col("text")), n, k))
     val withSig = docs
       .select(col("doc_id"), EventStreams.tsCol.as("ts_t"), sig.as("sig"))
     // short docs (null sig) route to singleton buckets keyed by their
@@ -80,7 +80,7 @@ object DocStreams {
     * by an earlier document inside the watermark horizon.
     *
     * Same two-operator chain as [[nearDupFilter]]: the narrow
-    * [[graft.fn.WinnowFingerprints]] kernel (stateless, in the scan
+    * [[graft.fn.Kernels.WinnowFingerprints]] kernel (stateless, in the scan
     * span) → `dropDuplicatesWithinWatermark` on the fingerprint →
     * per-(event-time, doc) count of surviving rows vs the doc's
     * fingerprint count (kept = first occupant EVERYWHERE). Docs with
@@ -100,7 +100,7 @@ object DocStreams {
   def sharedSpanFilter(docs: DataFrame, k: Int = 5, w: Int = 4,
                        horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val fps = gb.column(graft.fn.WinnowFingerprints(
+    val fps = gb.column(graft.fn.Kernels.WinnowFingerprints(
       gb.expression(col("text")), k, w))
     val rows = docs
       .select(col("doc_id"), EventStreams.tsCol.as("ts_t"), fps.as("__fps"))
@@ -237,7 +237,7 @@ object DocStreams {
       .join(qCorpus, Seq("__cell"))
       // same self-id exclusion as batch ivfTopKQuantized's q_id filter
       .filter(col(idCol) =!= col("doc_id"))
-      .withColumn("cos_sim", gb.column(graft.fn.CosineSimQ8(
+      .withColumn("cos_sim", gb.column(graft.fn.Kernels.CosineSimQ8(
         gb.expression(col("vec")), gb.expression(col("__q")),
         gb.expression(col("__scale")))))
       // NaN (zero-norm degenerates) would win the argmax — drop, as in
@@ -277,9 +277,9 @@ object DocStreams {
     */
   /** Streaming crawl-ingest gate — the streaming face of q133's
     * front half: fetched pages arrive, visible text is extracted
-    * ([[graft.fn.HtmlText]], stateless), short pages drop on a
+    * ([[graft.fn.Kernels.HtmlText]], stateless), short pages drop on a
     * token-count gate, PII is counted + scrubbed in one
-    * [[graft.fn.PiiScan]] kernel, EXACT content duplicates within
+    * [[graft.fn.Kernels.PiiScan]] kernel, EXACT content duplicates within
     * the watermark horizon drop on the redacted-text fingerprint
     * (the [[curationGate]] state pattern: bounded by the horizon,
     * evicted after it), and the URL is normalized for downstream
@@ -300,13 +300,13 @@ object DocStreams {
   def crawlGate(pages: DataFrame, minTokens: Int = 20,
                 horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val text = gb.column(graft.fn.HtmlText(gb.expression(col("html"))))
+    val text = gb.column(graft.fn.Kernels.HtmlText(gb.expression(col("html"))))
     val scrub = pages
       .select(col("doc_id"), EventStreams.tsCol.as("ts_t"), col("url"),
         text.as("__t"))
       .filter(size(split(col("__t"), " ")) >= minTokens)
       .select(col("doc_id"), col("ts_t"), col("url"),
-        gb.column(graft.fn.PiiScan(gb.expression(col("__t")))).as("__p"))
+        gb.column(graft.fn.Kernels.PiiScan(gb.expression(col("__t")))).as("__p"))
       .select(col("doc_id"), col("ts_t"), col("url"),
         (col("__p.n_email") + col("__p.n_ipv4") + col("__p.n_phone")).as("n_pii"),
         col("__p.redacted").as("text_out"),
@@ -343,7 +343,7 @@ object DocStreams {
   def byteCrawlGate(pages: DataFrame, minTokens: Int = 20,
                     horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val det = gb.column(graft.fn.CharsetDetect(
+    val det = gb.column(graft.fn.Kernels.CharsetDetect(
       gb.expression(coalesce(col("content_type"), lit(""))),
       gb.expression(col("payload"))))
     val decoded = pages
@@ -359,7 +359,7 @@ object DocStreams {
                    langs: Seq[String] = Nil,
                    horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val profile = gb.column(graft.fn.TextProfile(gb.expression(col("text"))))
+    val profile = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col("text"))))
     val scored = docs
       .select(col("doc_id"), EventStreams.tsCol.as("ts_t"), col("text"),
         profile.as("__p"),
@@ -455,7 +455,7 @@ object DocStreams {
   def qualityModelGate(docs: DataFrame, w: Seq[Double],
                        minScore: Double): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val p = gb.column(graft.fn.TextProfile(gb.expression(col("text"))))
+    val p = gb.column(graft.fn.Kernels.TextProfile(gb.expression(col("text"))))
     val feats = array(
       lit(1.0),
       least(col("__p.n_tokens") / 50.0, lit(1.0)),
@@ -474,7 +474,7 @@ object DocStreams {
   }
 
   /** AUDIO quality gate (round 14) — the audio `text_profile` face:
-    * decode-real curation signals ([[graft.fn.AudioProfile]]:
+    * decode-real curation signals ([[graft.fn.Kernels.AudioProfile]]:
     * clipping / silence / RMS / peak over the canonical mono stream
     * of WAV/FLAC/Vorbis payloads) filtering assets whose audio is
     * mostly silence, clipped, or too quiet. Completely STATELESS —
@@ -489,7 +489,7 @@ object DocStreams {
                        maxSilenceFrac: Double = 0.9,
                        minRms: Double = 0.005): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
-    val p = gb.column(graft.fn.AudioProfile(gb.expression(col("content"))))
+    val p = gb.column(graft.fn.Kernels.AudioProfile(gb.expression(col("content"))))
     assets
       .select(col("asset_id"), EventStreams.tsCol.as("ts_t"), col("content"),
         p.as("__p"))
@@ -526,9 +526,9 @@ object DocStreams {
     val t = col("text")
     val isHls = substring(t, 1, 7) === "#EXTM3U"
     val isMaster = t.contains("#EXT-X-STREAM-INF")
-    val variants = gb.column(graft.fn.HlsVariants(gb.expression(t)))
-    val segments = gb.column(graft.fn.HlsSegments(gb.expression(t)))
-    val reps = gb.column(graft.fn.MpdRepresentations(gb.expression(t)))
+    val variants = gb.column(graft.fn.Kernels.HlsVariants(gb.expression(t)))
+    val segments = gb.column(graft.fn.Kernels.HlsSegments(gb.expression(t)))
+    val reps = gb.column(graft.fn.Kernels.MpdRepresentations(gb.expression(t)))
     docs
       .select(col("doc_id"), EventStreams.tsCol.as("ts_t"), t,
         when(isHls && isMaster, variants)
@@ -604,11 +604,11 @@ object DocStreams {
     val c = col("content")
     val isMp4 = substring(c, 5, 4).cast("string") === "ftyp"
     val isWebm = hex(substring(c, 1, 4)) === "1A45DFA3"
-    val mp4Cues = gb.column(graft.fn.Mp4SubtitleCues(gb.expression(c)))
-    val webmCues = gb.column(graft.fn.WebmSubtitleCues(gb.expression(c)))
-    val dec = gb.column(graft.fn.CharsetDecode(
+    val mp4Cues = gb.column(graft.fn.Kernels.Mp4SubtitleCues(gb.expression(c)))
+    val webmCues = gb.column(graft.fn.Kernels.WebmSubtitleCues(gb.expression(c)))
+    val dec = gb.column(graft.fn.Kernels.CharsetDecode(
       gb.expression(coalesce(col("charset"), lit("utf-8"))), gb.expression(c)))
-    val textCues = gb.column(graft.fn.SubtitleCues(
+    val textCues = gb.column(graft.fn.Kernels.SubtitleCues(
       gb.expression(dec.getField("text"))))
     val cues = when(isMp4, mp4Cues).when(isWebm, webmCues).otherwise(textCues)
     val rows = docs
@@ -666,7 +666,7 @@ object DocStreams {
   /** Streaming IMAGE dedup gate — the media face of the dedup family
     * (the text gates above all have one; this closes the image/video
     * gap): decode → 9×8 dHash via the narrow
-    * [[graft.fn.ImageDhash64]] kernel (stateless, in the scan span),
+    * [[graft.fn.Kernels.ImageDhash64]] kernel (stateless, in the scan span),
     * then the SAME 16-bit band decomposition the batch pair stage
     * uses ([[graft.ext.Images.nearDupPairsFromHashes]]), as
     * watermark-bounded first-occupant state: each band deposits into
@@ -699,13 +699,13 @@ object DocStreams {
                      horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     bandDedupGate(assets,
-      gb.column(graft.fn.ImageDhash64(gb.expression(col("content")))),
+      gb.column(graft.fn.Kernels.ImageDhash64(gb.expression(col("content")))),
       bands, horizon)
   }
 
   /** The AUDIO face of [[imageDedupGate]] (round 9): the energy-band
     * fingerprint of decoded WAV/FLAC/Ogg-Vorbis PCM
-    * ([[graft.fn.AudioFingerprint64]]; Vorbis via the round-10
+    * ([[graft.fn.Kernels.AudioFingerprint64]]; Vorbis via the round-10
     * [[graft.ext.VorbisDecode]] signal path) through the same
     * watermark-bounded band state — identical conservatism contract,
     * identical output shape.
@@ -714,7 +714,7 @@ object DocStreams {
                      horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     bandDedupGate(assets,
-      gb.column(graft.fn.AudioFingerprint64(gb.expression(col("content")))),
+      gb.column(graft.fn.Kernels.AudioFingerprint64(gb.expression(col("content")))),
       bands, horizon)
   }
 
@@ -726,13 +726,13 @@ object DocStreams {
                      horizon: String = "10 minutes"): DataFrame = {
     import org.apache.spark.sql.{graftbridge => gb}
     bandDedupGate(assets,
-      gb.column(graft.fn.Mp4KeyframeDhash64(gb.expression(col("content")))),
+      gb.column(graft.fn.Kernels.Mp4KeyframeDhash64(gb.expression(col("content")))),
       bands, horizon)
   }
 
   /** The ANY-FRAME video face (round 12): every decoded frame of the
     * full I/P/B GOP indexes the asset
-    * ([[graft.fn.H264GopDhashes]] — DPB, multi-ref, bi-prediction,
+    * ([[graft.fn.Kernels.H264GopDhashes]] — DPB, multi-ref, bi-prediction,
     * weighted prediction, fMP4 all run), so a mid-GOP re-encode that
     * shares NO keyframe with its source still collides. The bucket
     * list per asset — distinct (band, band_val) pairs over the
@@ -749,7 +749,7 @@ object DocStreams {
     require(bands >= 1 && 16 * bands == 64, s"bands must split 64 bits; got $bands")
     // container-ROUTED index (round 14): MP4 → full H.264 GOP,
     // WebM → all VP8 keyframes; one stream admits both containers
-    val hashes = array_distinct(gb.column(graft.fn.VideoGopDhashes(
+    val hashes = array_distinct(gb.column(graft.fn.Kernels.VideoGopDhashes(
       gb.expression(col("content")), maxFrames)))
     val perBand = (0 until bands).map { bi =>
       transform(hashes, h => struct(lit(bi).as("band"),

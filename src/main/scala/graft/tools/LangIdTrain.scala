@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.ext.LangId
 
 /** Derives [[graft.ext.LangId.PinnedW]]: one-vs-rest GD over a
   * deterministic 4-language synthetic corpus (word pools are
@@ -12,54 +12,15 @@ import org.apache.spark.sql.functions._
   */
 object LangIdTrain {
 
-  val Pools: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "people", "first", "water", "time",
-      "word", "small", "great", "house"),
-    "de" -> Seq("der", "und", "die", "mit", "nicht", "haus", "wasser", "zeit",
-      "wort", "klein", "gross", "leute"),
-    "fr" -> Seq("les", "des", "est", "une", "gens", "premier", "eau", "temps",
-      "mot", "petit", "grande", "maison"),
-    "es" -> Seq("los", "las", "para", "como", "gente", "primero", "agua",
-      "tiempo", "palabra", "casa", "grande", "tierra"),
-    // round 13 (VERDICT r12 item 3): the scripts the charset
-    // subsystem already decodes — Cyrillic, Arabic, CJK
-    "ru" -> Seq("и", "не", "на", "что", "вода", "время", "слово", "дом",
-      "люди", "первый", "маленький", "большой"),
-    "ar" -> Seq("في", "من", "على", "أن", "ماء", "وقت", "كلمة", "بيت",
-      "ناس", "أول", "صغير", "كبير"),
-    "zh" -> Seq("的", "是", "了", "在", "水", "时间", "词", "房子",
-      "人们", "第一", "小", "大"),
-    "ja" -> Seq("の", "に", "です", "ます", "みず", "じかん", "ことば",
-      "いえ", "ひと", "はじめ", "ちいさい", "おおきい"),
-    "ko" -> Seq("의", "는", "이다", "에서", "물", "시간", "단어", "집",
-      "사람", "첫째", "작은", "큰"))
-
-  /** Out-of-set pool for the NONE-floor calibration: Finnish-shaped
-    * words none of [[graft.ext.LangId.Ngrams]] matches (asserted by
-    * LangIdSpec), so every head must score them below the floor.
-    */
-  val NonePool: Seq[String] = Seq("talo", "vesi", "aika", "sana", "kirja",
-    "kala", "lintu", "metsa", "joki", "kivi", "lumi", "tuli")
-
-  /** deterministic doc: 14 words from the language pool */
-  def doc(lang: String, seed: Long): String = {
-    val pool = Pools(lang)
-    (0 until 14).map(k => pool(((seed * 31 + k * 7 + seed / 13) % pool.size).toInt.abs))
-      .mkString(" ")
-  }
-
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val langs = graft.ext.LangId.Langs
     val k = langs.length
     val train = (0 until 500 * k).map { i =>
       val lang = langs(i % k)
-      (i.toLong, lang, doc(lang, 1000 + i))
+      (i.toLong, lang, LangId.doc(lang, 1000 + i))
     }.toDF("id", "lang", "text")
     val feats = graft.ext.LangId.featurize(train, "id", "text")
       .join(train.select($"id", $"lang"), "id")
@@ -73,7 +34,7 @@ object LangIdTrain {
     // docs must score < NoneThreshold on every head)
     val test = (0 until 100 * k).map { i =>
       val lang = langs(i % k)
-      (i.toLong, lang, doc(lang, 90000 + i * 3))
+      (i.toLong, lang, LangId.doc(lang, 90000 + i * 3))
     }.toDF("id", "lang", "text")
     val pred = graft.ext.LangId.featurize(test, "id", "text")
       .withColumn("pred", graft.ext.LangId.classify($"features", w.map(_.toSeq)))
@@ -89,7 +50,7 @@ object LangIdTrain {
     println(f"[langid] min in-language best-score $inMin%.4f (floor ${graft.ext.LangId.NoneThreshold})")
     val noneDocs = (0 until 200).map { i =>
       (i.toLong, (0 until 14).map(j =>
-        NonePool(((i * 31 + j * 7 + i / 13) % NonePool.size).abs)).mkString(" "))
+        LangId.NonePool(((i * 31 + j * 7 + i / 13) % LangId.NonePool.size).abs)).mkString(" "))
     }.toDF("id", "text")
     val nonePred = graft.ext.LangId.featurize(noneDocs, "id", "text")
       .withColumn("pred", graft.ext.LangId.classify($"features", w.map(_.toSeq)))

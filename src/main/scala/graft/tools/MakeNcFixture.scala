@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.io.{Nc3, SyntheticGrid}
 
 /** Dev tool: generate the committed NetCDF-3 fixture
@@ -12,11 +11,7 @@ import graft.io.{Nc3, SyntheticGrid}
 object MakeNcFixture {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("data/hermine_subset.nc")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val spec = SyntheticGrid.hermineSpec(step = 2.0)
     val grid = SyntheticGrid.cleanSentinels(SyntheticGrid.generate(spark, spec))

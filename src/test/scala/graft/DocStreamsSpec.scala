@@ -648,7 +648,7 @@ class DocStreamsSpec extends SparkSpec {
     val q = spark.readStream.schema(sch).option("maxFilesPerTrigger", "1")
       .parquet(dir)
       .select($"vid_id", $"ts",
-        org.apache.spark.sql.graftbridge.column(graft.fn.Mp4KeyframeDhash64(
+        org.apache.spark.sql.graftbridge.column(graft.fn.Kernels.Mp4KeyframeDhash64(
           org.apache.spark.sql.graftbridge.expression($"content"))).as("kf"))
       .where($"kf".isNotNull)
       .withWatermark("ts", "10 minutes")

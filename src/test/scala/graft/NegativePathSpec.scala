@@ -76,7 +76,7 @@ class NegativePathSpec extends SparkSpec {
     import graft.ext.{Bpe, LangModel, SimJoin}
     val docs = Seq((1L, "a b c")).toDF("id", "text")
     assert(intercept[IllegalArgumentException] {
-      graft.fn.WinnowFingerprints(
+      graft.fn.Kernels.WinnowFingerprints(
         org.apache.spark.sql.graftbridge.expression($"text"), 0, 4)
     }.getMessage.contains("shingle"))
     assert(intercept[IllegalArgumentException] {

@@ -21,7 +21,7 @@ class LangIdSpec extends graft.SparkSpec {
     val langs = LangId.Langs
     (0 until n).map { i =>
       val lang = langs(i % langs.length)
-      (i.toLong, lang, graft.tools.LangIdTrain.doc(lang, seedBase + i))
+      (i.toLong, lang, graft.ext.LangId.doc(lang, seedBase + i))
     }.toDF("id", "lang", "text")
   }
 
@@ -38,7 +38,7 @@ class LangIdSpec extends graft.SparkSpec {
     assert(acc === 1.0, s"holdout accuracy $acc")
     // none floor: out-of-set docs classify as none on the SAME model
     val noneDocs = (0 until 60).map { i =>
-      (i.toLong, (0 until 14).map(j => graft.tools.LangIdTrain.NonePool(
+      (i.toLong, (0 until 14).map(j => graft.ext.LangId.NonePool(
         ((i * 31 + j * 7 + i / 13) % 12).abs)).mkString(" "))
     }.toDF("id", "text")
     val noneAcc = LangId.featurize(noneDocs, "id", "text")
@@ -55,9 +55,9 @@ class LangIdSpec extends graft.SparkSpec {
       val cls = i % 11
       val text =
         if (cls == 10) "" // zero-evidence row
-        else if (cls == 9) (0 until 14).map(j => graft.tools.LangIdTrain
+        else if (cls == 9) (0 until 14).map(j => graft.ext.LangId
           .NonePool(((i * 31 + j * 7) % 12).abs)).mkString(" ")
-        else graft.tools.LangIdTrain.doc(LangId.Langs(cls), 7000 + i)
+        else graft.ext.LangId.doc(LangId.Langs(cls), 7000 + i)
       (i.toLong, text)
     }.toDF("id", "text")
     // force the ARRAY form by passing a same-valued copy (different
@@ -77,7 +77,7 @@ class LangIdSpec extends graft.SparkSpec {
     // feature — assert the invariant the pools were built to
     // a doc is pool words space-joined then space-padded: the worst
     // case for cross-word matches is the full concatenation
-    val doc = " " + graft.tools.LangIdTrain.NonePool.mkString(" ") + " "
+    val doc = " " + graft.ext.LangId.NonePool.mkString(" ") + " "
     LangId.Ngrams.foreach { g =>
       assert(!doc.contains(g), s"'$g' hits the none pool")
     }
