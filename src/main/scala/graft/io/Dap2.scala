@@ -28,12 +28,13 @@ import graft.io.SyntheticGrid.GridSpec
   * 32-bit counts), and a `Grid`'s payload is its array part followed
   * by each map vector in declaration order.
   *
-  * Scale shape (mirrors [[GridIngest.ingestNc]] exactly): the DRIVER
-  * fetches only the four coordinate axes (KB-scale); the (time, depth)
-  * plane list then fans out over executors and EACH TASK issues its
-  * own ranged `.dods` hyperslab request for its planes — the server
-  * does the subsetting (that is OPeNDAP's whole point), the cluster
-  * does the decode, and no grid byte ever passes through the driver.
+  * Scale shape: the DRIVER fetches only the four coordinate axes
+  * (KB-scale); [[gridSource]] declares one (time, depth) plane per
+  * block to the shared block reader ([[GridIngest.rows]]), and EACH
+  * TASK issues its own ranged `.dods` hyperslab request for its planes
+  * — the server does the subsetting (that is OPeNDAP's whole point),
+  * the cluster does the decode, and no grid byte ever passes through
+  * the driver.
   * At 100 TB-scale archives the per-task unit stays one
   * (time, depth) lat×lon plane (~tens of MB at GLBu 0.08°), the same
   * bound the Nc3/Nc4 paths guarantee.
@@ -310,103 +311,61 @@ object Dap2 {
   }
 
   /** Driver-side dataset probe: axes → [[GridSpec]] (uniform lat/lon
-    * enforced, the [[Nc3.gridSpecOf]] contract).
+    * enforced by [[SyntheticGrid.specFromAxes]]).
     */
   def gridSpecOf(url: String,
                  timeVar: String = "time", depthVar: String = "depth",
-                 latVar: String = "lat", lonVar: String = "lon"): GridSpec = {
-    val times = fetchAxis(url, timeVar).map(math.round).toSeq
-    val depths = fetchAxis(url, depthVar).toSeq
-    val lats = fetchAxis(url, latVar)
-    val lons = fetchAxis(url, lonVar)
-    def uniformStep(a: Array[Double], what: String): Double = {
-      if (a.length < 2) return 1.0
-      val step = a(1) - a(0)
-      a.sliding(2).foreach { w =>
-        require(math.abs((w(1) - w(0)) - step) < 1e-6, s"$what axis not uniform")
-      }
-      step
-    }
-    GridSpec(lats.head, uniformStep(lats, "lat"), lats.length,
-      lons.head, uniformStep(lons, "lon"), lons.length, depths, times)
-  }
-
-  /** CF packed-value decoder: `raw == fill → null`, else
-    * `raw * scale + offset` (attributes default to identity packing).
-    */
-  final case class CfDecode(scale: Double, offset: Double, fill: Option[Double])
-      extends Serializable {
-    def decode(raw: Double): java.lang.Double =
-      if (fill.exists(_ == raw)) null
-      else java.lang.Double.valueOf(raw * scale + offset)
-  }
-
-  def cfDecodeOf(das: Map[String, Map[String, String]], v: String): CfDecode = {
-    val atts = das.getOrElse(v, Map.empty)
-    CfDecode(
-      atts.get("scale_factor").map(_.toDouble).getOrElse(1.0),
-      atts.get("add_offset").map(_.toDouble).getOrElse(0.0),
-      atts.get("_FillValue").map(_.toDouble))
-  }
+                 latVar: String = "lat", lonVar: String = "lon"): GridSpec =
+    SyntheticGrid.specFromAxes(
+      fetchAxis(url, timeVar).map(math.round).toSeq,
+      fetchAxis(url, depthVar).toSeq,
+      fetchAxis(url, latVar),
+      fetchAxis(url, lonVar))
 
   // --------------------------------------------------------- ingest
 
-  /** Ingest a remote DAP2 grid dataset into the engine's long-format
-    * grid schema — the same output as [[GridIngest.ingestNc]], so the
-    * whole track-profile pipeline runs unchanged against a live
-    * OPeNDAP endpoint.
-    *
-    * Driver work: 3 tiny text fetches (DDS, DAS) + 4 axis fetches.
-    * Distributed work: one `.dods` hyperslab request per
-    * (time, depth, measure) PLANE per task — the unit that keeps task
-    * input bounded by one lat×lon plane regardless of archive size.
+  /** The remote dataset as a [[GridIngest.Source]]: one
+    * (time, depth) lat×lon plane per block, fetched by the task that
+    * owns it as one `.dods` hyperslab request per variable, and
+    * CF-decoded with the DAS `scale_factor`, `add_offset`,
+    * `_FillValue` and `missing_value`.
     */
-  def ingest(spark: SparkSession, url: String, partitions: Int = 32,
-             tempVar: String = "water_temp",
-             salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
+  def gridSource(url: String, tempVar: String, salVar: String): GridIngest.Source = {
     val dds = parseDds(new String(fetch(s"$url.dds"), StandardCharsets.US_ASCII))
     val das = parseDas(new String(fetch(s"$url.das"), StandardCharsets.US_ASCII))
     val spec = gridSpecOf(url)
-    val tArr = dds.dataArray(tempVar)
-    val sArr = dds.dataArray(salVar)
-    require(tArr.dims.map(_.size) == Seq(spec.times.size, spec.depths.size,
-        spec.nLat, spec.nLon),
-      s"$tempVar dims ${tArr.dims.map(_.size)} don't match axes " +
-        s"(${spec.times.size}, ${spec.depths.size}, ${spec.nLat}, ${spec.nLon})")
-    require(sArr.dims.map(_.size) == tArr.dims.map(_.size),
-      s"$salVar/$tempVar shapes differ")
-    val tDec = cfDecodeOf(das, tempVar)
-    val sDec = cfDecodeOf(das, salVar)
-    val times = spec.times; val depths = spec.depths
-    val nD = depths.size
-    val nLat = spec.nLat; val nLon = spec.nLon
-    val planeCells = nLat * nLon
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val nSlabs = times.size * nD
-    spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
-      .as[Long]
-      .mapPartitions { slabIds =>
-        slabIds.flatMap { slab =>
-          val t = (slab / nD).toInt
-          val d = (slab % nD).toInt
-          val slice = s"[$t][$d][0:${nLat - 1}][0:${nLon - 1}]"
-          val tv = parseDods(fetch(s"$url.dods?$tempVar$slice"))(tempVar).values
-          val sv = parseDods(fetch(s"$url.dods?$salVar$slice"))(salVar).values
-          require(tv.length == planeCells && sv.length == planeCells,
-            s"plane $slice returned ${tv.length}/${sv.length} cells, expected $planeCells")
-          (0 until planeCells).iterator.map { c =>
-            val y = c / nLon
-            val x = c % nLon
-            (times(t), d, depths(d),
-              y, latMin + y * latStep,
-              x, lonMin + x * lonStep,
-              tDec.decode(tv(c)), sDec.decode(sv(c)))
+    val vars = Seq(tempVar, salVar).map { v =>
+      v -> GridIngest.Cf.of(a => das.getOrElse(v, Map.empty).get(a).map(_.toDouble))
+    }
+    GridIngest.Source(spec,
+      Seq(tempVar, salVar).map(v => v -> dds.dataArray(v).dims.map(_.size.toLong)),
+      Seq(1, 1, spec.nLat, spec.nLon),
+      () => new GridIngest.BlockReader {
+        def read(b: GridIngest.Block, t: Array[Double], s: Array[Double]): Unit =
+          vars.zip(Seq(t, s)).foreach { case ((v, cf), out) =>
+            val slice = Seq((b.t, b.nt), (b.d, b.nd), (b.y, b.ny), (b.x, b.nx))
+              .map { case (o, n) => s"[$o:${o + n - 1}]" }.mkString
+            val vals = parseDods(fetch(s"$url.dods?$v$slice"))(v).values
+            require(vals.length == b.cells,
+              s"$v$slice returned ${vals.length} cells, expected ${b.cells}")
+            GridIngest.gather(b, Seq(b.nd * b.ny * b.nx, b.ny * b.nx, b.nx, 1),
+              vals(_), cf, out)
           }
-        }
-      }
-      .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-        "lon_idx", "lon", "water_temp", "salinity")
+      })
   }
+
+  /** Ingest a remote DAP2 grid dataset into the engine's long-format
+    * grid schema — the same rows as every other container, so the
+    * whole track-profile pipeline runs unchanged against a live
+    * OPeNDAP endpoint.
+    *
+    * Driver work: 2 tiny text fetches (DDS, DAS) + 4 axis fetches.
+    * Distributed work: one `.dods` hyperslab request per
+    * (time, depth, measure) PLANE — the unit that keeps task input
+    * bounded by one lat×lon plane regardless of archive size.
+    */
+  def ingest(spark: SparkSession, url: String, partitions: Int = 32,
+             tempVar: String = "water_temp",
+             salVar: String = "salinity"): DataFrame =
+    GridIngest.rows(spark, gridSource(url, tempVar, salVar), partitions)
 }

@@ -1,346 +1,250 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.ByteBuffer
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import graft.io.SyntheticGrid.GridSpec
+import graft.model.Schemas
 
 /** S4: real grid ingestion — dense 4-D model array → long-format
   * time-partitioned parquet (SURVEY.md §2.1 S4, §7.2 phase 3).
   *
   * The reference reads a remote netCDF 4-D array via OPeNDAP hyperslab
-  * requests (`trackplot_hycom.py:144,244`). FOUR container formats
-  * feed the same slab/chunk-parallel distribution here, sniffed in
-  * [[ingestToParquet]]:
-  *  - **NetCDF-3 classic** ([[Nc3]], [[ingestNc]]) — the REAL public
-  *    format HYCOM publishes, parsed JDK-only (header + CF
-  *    short-packing + _FillValue);
-  *  - **netCDF-4 / HDF5** ([[Nc4]], [[ingestNc4]]) — chunked/deflated
-  *    layout, chunk-index-parallel;
-  *  - **Zarr v2** ([[Zarr]], [[ingestZarr]]) — the cloud-native
-  *    one-file-per-chunk store, chunk-grid-parallel;
-  *  - **GRD1** ([[ingest]]) — a minimal dense binary layout kept as
-  *    the round-trip fixture format and generator target.
+  * requests (`trackplot_hycom.py:144,244`). Four containers feed ONE
+  * block reader here:
+  *  - **NetCDF-3 classic** ([[Nc3]], [[ingestNc]]) — the format HYCOM
+  *    publishes: one (t, d) plane per block;
+  *  - **netCDF-4 / HDF5** ([[Nc4]], [[ingestNc4]]) — one stored chunk
+  *    per block, or one plane of a contiguous variable;
+  *  - **Zarr v2/v3** ([[Zarr]], [[ingestZarr]]) — one chunk per block;
+  *  - **OPeNDAP DAP2** ([[Dap2.ingest]]) — one plane hyperslab per block.
   *
-  * ==GRD1 layout (big-endian)==
-  * {{{
-  *   magic   "GRD1"                      4 bytes
-  *   nT, nD, nLat, nLon                  4 × int32
-  *   times   nT × int64                  hours since 2000-01-01T00Z
-  *   depths  nD × float64                meters, positive down
-  *   latMin, latStep, lonMin, lonStep    4 × float64
-  *   water_temp  nT·nD·nLat·nLon × float64, row-major [t][d][y][x]
-  *   salinity    nT·nD·nLat·nLon × float64, same order
-  * }}}
-  * Missing cells hold the fill value -30000.0 (netCDF `_FillValue`
-  * convention) and are decoded to SQL null at ingest — NaN never
+  * Each container declares a [[Source]]: its [[GridSpec]] (built by
+  * [[SyntheticGrid.specFromAxes]]), its data variables' shapes, its block
+  * shape, and a per-task [[BlockReader]] that decodes a block of both
+  * variables into dense `Array[Double]`s through the one CF rule
+  * ([[Cf]]). [[rows]] owns everything else once: the driver-side shape
+  * check, the fan-out over `min(partitions, blocks)` tasks, closing
+  * the per-task reader when the task ends, and the rows of
+  * [[Schemas.gridSchema]]. Missing cells decode to SQL null — NaN never
   * enters the engine (SURVEY.md §7.4 trap 1).
   *
-  * ==Scale design==
-  * The file is NOT read as one blob: [[ingest]] reads the small header
-  * driver-side, then `spark.range` over (t, d) slabs fans the byte
-  * ranges out across the cluster — each task seeks directly to its
-  * slab (one contiguous read per variable), the distributed analog of
-  * the reference's per-point hyperslab requests but issued once per
-  * slab instead of 9× per track point. On a cluster the
-  * `RandomAccessFile` becomes any seekable stream (HDFS/S3 ranged
-  * GET); the slab math is unchanged. Output goes through
-  * [[SyntheticGrid.writeGrid]] → parquet partitioned by `time`,
-  * sorted by (lat_idx, lon_idx) within files, so downstream queries
-  * get partition pruning + row-group skipping instead of re-touching
-  * the dense array.
+  * The KB-scale metadata is read on the driver; each task seeks (or
+  * GETs) only its own blocks, the distributed analog of the
+  * reference's per-point hyperslab requests issued once per block
+  * instead of 9× per track point. Output goes through
+  * [[SyntheticGrid.writeGrid]] → parquet partitioned by `time`.
   */
 object GridIngest {
 
-  val Fill: Double = -30000.0
-  private val Magic = 0x47524431 // "GRD1"
-
-  final case class Grd1Header(spec: GridSpec, headerBytes: Long) {
-    def nT: Int = spec.times.size
-    def nD: Int = spec.depths.size
-    def cellsPerSlab: Long = spec.nLat.toLong * spec.nLon
-    def varBlockBytes: Long = nT * nD * cellsPerSlab * 8
-  }
-
-  object Grd1 {
-
-    def readHeader(path: String): Grd1Header = {
-      val in = new java.io.DataInputStream(
-        new java.io.BufferedInputStream(new java.io.FileInputStream(path)))
-      try {
-        require(in.readInt() == Magic, s"$path: not a GRD1 file")
-        val nT = in.readInt(); val nD = in.readInt()
-        val nLat = in.readInt(); val nLon = in.readInt()
-        val times = Seq.fill(nT)(in.readLong())
-        val depths = Seq.fill(nD)(in.readDouble())
-        val latMin = in.readDouble(); val latStep = in.readDouble()
-        val lonMin = in.readDouble(); val lonStep = in.readDouble()
-        val headerBytes = 4L + 4 * 4 + nT * 8L + nD * 8L + 4 * 8L
-        Grd1Header(
-          GridSpec(latMin, latStep, nLat, lonMin, lonStep, nLon, depths, times),
-          headerBytes)
-      } finally in.close()
-    }
-
-    /** Fixture/dev writer: dump a long-format grid DataFrame (the
-      * [[SyntheticGrid]] shape) to GRD1. Driver-side collect — a test
-      * utility for small fixtures, NOT an operator (the engine's sink
-      * is parquet; GRD1 exists to exercise the ingest path).
-      */
-    def write(grid: DataFrame, spec: GridSpec, path: String): Unit = {
-      val nT = spec.times.size; val nD = spec.depths.size
-      val n = nT.toLong * nD * spec.nLat * spec.nLon
-      require(n < Int.MaxValue / 2, "Grd1.write is a small-fixture utility")
-      val temp = Array.fill(n.toInt)(Fill)
-      val sal = Array.fill(n.toInt)(Fill)
-      val tIdx = spec.times.zipWithIndex.toMap
-      grid.select("time", "depth_idx", "lat_idx", "lon_idx", "water_temp", "salinity")
-        .collect()
-        .foreach { r =>
-          val t = tIdx(r.getLong(0)); val d = r.getInt(1)
-          val y = r.getInt(2); val x = r.getInt(3)
-          val off = (((t.toLong * nD + d) * spec.nLat + y) * spec.nLon + x).toInt
-          if (!r.isNullAt(4)) temp(off) = r.getDouble(4)
-          if (!r.isNullAt(5)) sal(off) = r.getDouble(5)
-        }
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(path)))
-      try {
-        out.writeInt(Magic)
-        out.writeInt(nT); out.writeInt(nD)
-        out.writeInt(spec.nLat); out.writeInt(spec.nLon)
-        spec.times.foreach(out.writeLong)
-        spec.depths.foreach(out.writeDouble)
-        out.writeDouble(spec.latMin); out.writeDouble(spec.latStep)
-        out.writeDouble(spec.lonMin); out.writeDouble(spec.lonStep)
-        temp.foreach(out.writeDouble)
-        sal.foreach(out.writeDouble)
-      } finally out.close()
-    }
-  }
-
-  /** Ingest a GRD1 file into the long-format grid schema
-    * (Schemas.gridSchema), fill values decoded to null. Slab-parallel:
-    * one task reads one or more contiguous (t, d) planes.
+  /** Sentinel the fixture writers store for a missing cell (netCDF
+    * `_FillValue` convention; also `Zarr.writeStore`'s `fill_value`).
     */
-  def ingest(spark: SparkSession, path: String, partitions: Int = 32): DataFrame = {
-    import spark.implicits._
-    val hdr = Grd1.readHeader(path)
-    val spec = hdr.spec
-    val nSlabs = hdr.nT * hdr.nD
-    val slabCells = hdr.cellsPerSlab.toInt
-    val rows = spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
-      .as[Long]
-      .mapPartitions { slabIds =>
-        val raf = new java.io.RandomAccessFile(path, "r")
-        // one fd per task — close it when the task ends (success OR
-        // failure); without this, fds leak until executor GC and long
-        // sessions eventually hit the open-file limit
-        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-          _ => raf.close())
-        val tempBuf = new Array[Byte](slabCells * 8)
-        val salBuf = new Array[Byte](slabCells * 8)
-        slabIds.flatMap { slab =>
-          val t = (slab / hdr.nD).toInt
-          val d = (slab % hdr.nD).toInt
-          val slabOff = slab * slabCells * 8
-          raf.seek(hdr.headerBytes + slabOff)
-          raf.readFully(tempBuf)
-          raf.seek(hdr.headerBytes + hdr.varBlockBytes + slabOff)
-          raf.readFully(salBuf)
-          val tb = java.nio.ByteBuffer.wrap(tempBuf)
-          val sb = java.nio.ByteBuffer.wrap(salBuf)
-          (0 until slabCells).iterator.map { c =>
-            val y = c / spec.nLon
-            val x = c % spec.nLon
-            val wt = tb.getDouble(c * 8)
-            val sa = sb.getDouble(c * 8)
-            (spec.times(t), d, spec.depths(d),
-              y, spec.latMin + y * spec.latStep,
-              x, spec.lonMin + x * spec.lonStep,
-              if (wt == Fill) None else Some(wt),
-              if (sa == Fill) None else Some(sa))
+  val Fill: Double = -30000.0
+
+  /** One block of a container's 4-D (time, depth, lat, lon) data
+    * variables: origin (t, d, y, x) and extent (nt, nd, ny, nx),
+    * clipped to the array shape.
+    */
+  final case class Block(t: Int, d: Int, y: Int, x: Int,
+                         nt: Int, nd: Int, ny: Int, nx: Int) {
+    def cells: Int = nt * nd * ny * nx
+  }
+
+  /** Row-major tiling of a 4-D `shape` by `size`; edge blocks clipped. */
+  private def blocksOf(shape: Seq[Int], size: Seq[Int]): Seq[Block] = {
+    def axis(k: Int): Seq[(Int, Int)] =
+      (0 until shape(k) by size(k)).map(o => (o, math.min(size(k), shape(k) - o)))
+    for ((t, nt) <- axis(0); (d, nd) <- axis(1); (y, ny) <- axis(2); (x, nx) <- axis(3))
+      yield Block(t, d, y, x, nt, nd, ny, nx)
+  }
+
+  /** The CF rule, the same for every container: a raw value equal to
+    * `_FillValue` or `missing_value`, or NaN, is missing (NaN in a
+    * decoded block, null in a row); any other value is
+    * `raw * scale + offset`. An absent attribute is NaN and matches
+    * nothing.
+    */
+  final case class Cf(scale: Double = 1.0, offset: Double = 0.0,
+                      fill: Double = Double.NaN, missing: Double = Double.NaN) {
+    def apply(raw: Double): Double =
+      if (raw == fill || raw == missing || raw.isNaN) Double.NaN
+      else raw * scale + offset
+  }
+
+  object Cf {
+    /** From a variable's numeric attributes. */
+    def of(att: String => Option[Double]): Cf =
+      Cf(att("scale_factor").getOrElse(1.0), att("add_offset").getOrElse(0.0),
+        att("_FillValue").getOrElse(Double.NaN), att("missing_value").getOrElse(Double.NaN))
+  }
+
+  /** Element `i` of a stored buffer, as a raw double. */
+  trait Raw extends Serializable { def apply(bb: ByteBuffer, i: Int): Double }
+
+  /** Per-task decoder of a container's blocks, closed when the task ends. */
+  trait BlockReader extends java.io.Closeable {
+    /** Decodes block `b` of both data variables into the first
+      * `b.cells` entries of `temp` and `sal`, block row-major
+      * (t, d, y, x), NaN = null.
+      */
+    def read(b: Block, temp: Array[Double], sal: Array[Double]): Unit
+    def close(): Unit = ()
+  }
+
+  /** What a grid container declares to [[rows]].
+    *
+    * @param shapes    each data variable's shape by name, checked on
+    *                  the driver against the spec's axes
+    * @param blockSize the (t, d, y, x) block shape the container reads
+    * @param open      builds one task's reader (serializable)
+    */
+  final case class Source(spec: GridSpec, shapes: Seq[(String, Seq[Long])],
+                          blockSize: Seq[Int], open: () => BlockReader)
+
+  /** Copies block `b` out of stored values `raw` (element index →
+    * raw value, `strides` elements per step of t, d, y, x from the
+    * block origin) into `out`, block row-major, through `cf`.
+    */
+  def gather(b: Block, strides: Seq[Int], raw: Int => Double, cf: Cf,
+             out: Array[Double]): Unit = {
+    val Seq(st, sd, sy, sx) = strides
+    var c = 0
+    var t = 0
+    while (t < b.nt) {
+      var d = 0
+      while (d < b.nd) {
+        var y = 0
+        while (y < b.ny) {
+          val row = t * st + d * sd + y * sy
+          var x = 0
+          while (x < b.nx) { out(c) = cf(raw(row + x * sx)); c += 1; x += 1 }
+          y += 1
+        }
+        d += 1
+      }
+      t += 1
+    }
+  }
+
+  /** Every in-bounds cell of one stored chunk of an array of any rank:
+    * (row-major index in the whole array, element index in the chunk
+    * at element `strides`). For the driver-side whole-array reads of
+    * small axis variables.
+    */
+  def chunkCells(shape: Seq[Long], origin: Seq[Long], chunks: Seq[Int],
+                 strides: Seq[Int]): Seq[(Long, Int)] =
+    shape.indices.foldLeft(Seq((0L, 0))) { (acc, d) =>
+      val inChunk = 0 until math.min(chunks(d).toLong, shape(d) - origin(d)).toInt
+      for ((flat, elem) <- acc; i <- inChunk)
+        yield (flat * shape(d) + origin(d) + i, elem + i * strides(d))
+    }
+
+  /** Where one variable's (t, d) planes sit in a local file: plane
+    * (t, d) starts at `begin + t * tStride + d * planeBytes`.
+    */
+  final case class Planes(begin: Long, tStride: Long, planeBytes: Long,
+                          raw: Raw, cf: Cf)
+
+  /** Per-task reader of plane-laid-out variables (NetCDF-3, contiguous
+    * netCDF-4): one seek and one read per variable and (t, d) plane.
+    */
+  def planeReader(path: String, temp: Planes, sal: Planes): () => BlockReader = () =>
+    new BlockReader {
+      private val raf = new java.io.RandomAccessFile(path, "r")
+      private val bufs = Seq(temp, sal).map(p => new Array[Byte](Math.toIntExact(p.planeBytes)))
+      def read(b: Block, t: Array[Double], s: Array[Double]): Unit =
+        Seq((temp, bufs(0), t), (sal, bufs(1), s)).foreach { case (p, buf, out) =>
+          raf.seek(p.begin + b.t * p.tStride + b.d * p.planeBytes)
+          raf.readFully(buf)
+          val bb = ByteBuffer.wrap(buf)
+          gather(b, Seq(0, 0, b.nx, 1), i => p.raw(bb, i), p.cf, out)
+        }
+      override def close(): Unit = raf.close()
+    }
+
+  /** The one place decoded blocks become grid rows: checks each data
+    * variable's shape against the spec's axes on the driver, fans the
+    * blocks out over `min(partitions, blocks)` tasks, and emits the
+    * rows of [[Schemas.gridSchema]], missing values as null.
+    */
+  def rows(spark: SparkSession, src: Source, partitions: Int): DataFrame = {
+    val spec = src.spec
+    val shape = Seq(spec.times.size, spec.depths.size, spec.nLat, spec.nLon)
+    src.shapes.foreach { case (v, s) =>
+      require(s == shape.map(_.toLong),
+        s"data variable $v has shape ${s.mkString("(", ", ", ")")}, but the axes " +
+          s"give (time, depth, lat, lon) = ${shape.mkString("(", ", ", ")")}")
+    }
+    val blockCells = src.blockSize.zip(shape).map { case (b, n) => math.min(b, n).toLong }.product
+    require(blockCells <= Int.MaxValue, s"block ${src.blockSize} holds more than 2^31 cells")
+    val blocks = blocksOf(shape, src.blockSize)
+    val times = spec.times.toArray; val depths = spec.depths.toArray
+    val (latMin, latStep, lonMin, lonStep) =
+      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
+    val open = src.open
+    val types = Schemas.gridSchema.map(_.dataType)
+    val rdd = spark.sparkContext
+      .parallelize(blocks, math.max(1, math.min(partitions, blocks.size)))
+      .mapPartitions { it =>
+        val reader = open()
+        // one reader (fd) per task — closed when the task ends, success
+        // OR failure, so long sessions never hit the open-file limit
+        TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
+        val temp = new Array[Double](blockCells.toInt)
+        val sal = new Array[Double](blockCells.toInt)
+        // one mutable row per task: the scan projects each row to an
+        // UnsafeRow before asking for the next
+        val row = new SpecificInternalRow(types)
+        def measure(i: Int, v: Double): Unit =
+          if (v.isNaN) row.setNullAt(i) else row.setDouble(i, v)
+        it.flatMap { b =>
+          reader.read(b, temp, sal)
+          Iterator.range(0, b.cells).map { c =>
+            val x = b.x + c % b.nx
+            val y = b.y + c / b.nx % b.ny
+            val d = b.d + c / (b.nx * b.ny) % b.nd
+            val t = b.t + c / (b.nx * b.ny * b.nd)
+            row.setLong(0, times(t))
+            row.setInt(1, d); row.setDouble(2, depths(d))
+            row.setInt(3, y); row.setDouble(4, latMin + y * latStep)
+            row.setInt(5, x); row.setDouble(6, lonMin + x * lonStep)
+            measure(7, temp(c)); measure(8, sal(c))
+            row: InternalRow
           }
         }
       }
-      .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-        "lon_idx", "lon", "water_temp", "salinity")
-    rows
+    graftbridge.internalCreateDataFrame(spark, rdd, Schemas.gridSchema)
   }
 
-  /** Ingest a NetCDF-3 classic file (the reference's REAL container —
-    * trackplot_hycom.py:144) into the long-format grid schema. Same
-    * slab-parallel distribution as the GRD1 path: the KB-scale header
-    * and axes are parsed driver-side, then each task seeks straight to
-    * its (t, d) planes via [[Nc3.SlabReader]] — CF short-packing
-    * (scale/offset) and `_FillValue` → null are decoded per cell,
-    * exactly what the HYCOM files publish.
+  /** Ingest a NetCDF-3 classic file (the reference's container —
+    * trackplot_hycom.py:144) into the long-format grid schema, one
+    * (t, d) plane per block ([[Nc3.gridSource]]).
     */
   def ingestNc(spark: SparkSession, path: String, partitions: Int = 32,
                tempVar: String = "water_temp",
-               salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
-    val hdr = Nc3.readHeader(path)
-    val spec = Nc3.gridSpecOf(path, hdr)
-    val nD = spec.depths.size
-    val planeCells = spec.nLat * spec.nLon
-    val tempR = Nc3.slabReaderOf(hdr, hdr.variable(tempVar), nD, planeCells)
-    val salR = Nc3.slabReaderOf(hdr, hdr.variable(salVar), nD, planeCells)
-    val times = spec.times; val depths = spec.depths
-    val nLon = spec.nLon
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val nSlabs = times.size * nD
-    spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
-      .as[Long]
-      .mapPartitions { slabIds =>
-        val raf = new java.io.RandomAccessFile(path, "r")
-        // close the per-task fd at task end (see `ingest` — same leak)
-        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-          _ => raf.close())
-        val tBuf = new Array[Byte](tempR.planeBytes)
-        val sBuf = new Array[Byte](salR.planeBytes)
-        slabIds.flatMap { slab =>
-          val t = (slab / nD).toInt
-          val d = (slab % nD).toInt
-          val tb = tempR.readPlane(raf, t, d, tBuf)
-          val sb = salR.readPlane(raf, t, d, sBuf)
-          (0 until planeCells).iterator.map { c =>
-            val y = c / nLon
-            val x = c % nLon
-            (times(t), d, depths(d),
-              y, latMin + y * latStep,
-              x, lonMin + x * lonStep,
-              tempR.dec.decode(tb, c),
-              salR.dec.decode(sb, c))
-          }
-        }
-      }
-      .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-        "lon_idx", "lon", "water_temp", "salinity")
-  }
+               salVar: String = "salinity"): DataFrame =
+    rows(spark, Nc3.gridSource(path, tempVar, salVar), partitions)
 
-  /** Ingest a netCDF-4 / HDF5 file (the container modern HYCOM-style
-    * archives publish — the reference's `netCDF4.Dataset` opens these,
-    * trackplot_hycom.py:144) into the long-format grid schema.
-    *
-    * Distribution unit is the HDF5 CHUNK — the natural one (each chunk
-    * is an independent gzip stream): the driver parses the KB-scale
-    * metadata and chunk index, pairs water_temp/salinity chunks by
-    * logical offset, and fans the pairs out; each task seeks to its
-    * two chunks, inflates, CF-decodes, and emits joined cells. A chunk
-    * absent from the index was never written = all fill → both
-    * measures null (the grid row still exists, as in the Nc3 path).
-    * Contiguous (unfiltered) data vars take the same plane-slab split
-    * as [[ingestNc]].
+  /** Ingest a netCDF-4 / HDF5 file (what `netCDF4.Dataset` opens,
+    * trackplot_hycom.py:144) into the long-format grid schema, one
+    * stored chunk per block ([[Nc4.gridSource]]). A chunk absent from
+    * the index was never written: all fill, both measures null.
     */
   def ingestNc4(spark: SparkSession, path: String, partitions: Int = 32,
                 tempVar: String = "water_temp",
-                salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
+                salVar: String = "salinity"): DataFrame =
+    rows(spark, nc4Source(path, tempVar, salVar), partitions)
+
+  private def nc4Source(path: String, tempVar: String, salVar: String): Source = {
     val f = Nc4.readFile(path)
-    val spec = Nc4.gridSpecOf(f)
-    val nD = spec.depths.size
-    val nLon = spec.nLon
-    val times = spec.times; val depths = spec.depths
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val tempDs = f.dataset(tempVar); val salDs = f.dataset(salVar)
-    require(tempDs.dims.size == 4 && salDs.dims == tempDs.dims,
-      s"$path: expected matching 4-D (time,depth,lat,lon) data variables")
-    val dims = tempDs.dims
-    val tempDec = Nc4.decoderOf(tempDs); val salDec = Nc4.decoderOf(salDs)
-
-    (tempDs.layout, salDs.layout) match {
-      case (tl: Nc4.Chunked, sl: Nc4.Chunked) =>
-        require(tl.chunkDims == sl.chunkDims,
-          s"$path: $tempVar and $salVar have different chunk shapes")
-        val chunkDims = tl.chunkDims
-        val tempRd = Nc4.chunkReaderOf(tempDs); val salRd = Nc4.chunkReaderOf(salDs)
-        val tempChunks = Nc4.chunkRefs(path, tempDs).map(c => c.offsets -> c).toMap
-        val salChunks = Nc4.chunkRefs(path, salDs).map(c => c.offsets -> c).toMap
-        // every chunk origin of the regular chunk grid (missing from
-        // both indexes = all-fill chunk, still emitted as null cells)
-        val origins = {
-          def axis(d: Int) = 0L until dims(d) by chunkDims(d)
-          for (t <- axis(0); dd <- axis(1); y <- axis(2); x <- axis(3))
-            yield Seq(t, dd, y, x)
-        }
-        val work = origins.map(o => (o, tempChunks.get(o), salChunks.get(o)))
-        val nPart = math.max(1, math.min(partitions, work.size))
-        spark.sparkContext.parallelize(work, nPart)
-          .mapPartitions { it =>
-            val raf = new java.io.RandomAccessFile(path, "r")
-            org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-              _ => raf.close())
-            def load(ref: Option[Nc4.ChunkRef], rd: Nc4.ChunkReader): Option[java.nio.ByteBuffer] =
-              ref.map { c =>
-                val b = new Array[Byte](c.storedSize)
-                raf.seek(c.addr); raf.readFully(b)
-                java.nio.ByteBuffer.wrap(rd.decode(b, c.storedSize, c.filterMask))
-              }
-            it.flatMap { case (o, tRef, sRef) =>
-              val tb = load(tRef, tempRd)
-              val sb = load(sRef, salRd)
-              val (ct, cd, cy, cx) = (chunkDims(0), chunkDims(1), chunkDims(2), chunkDims(3))
-              for {
-                it0 <- (0 until ct).iterator; t = o(0) + it0 if t < dims(0)
-                id0 <- 0 until cd; d = o(1) + id0 if d < dims(1)
-                iy <- 0 until cy; y = o(2) + iy if y < dims(2)
-                ix <- 0 until cx; x = o(3) + ix if x < dims(3)
-              } yield {
-                val cell = ((it0 * cd + id0) * cy + iy) * cx + ix
-                (times(t.toInt), d.toInt, depths(d.toInt),
-                  y.toInt, latMin + y * latStep,
-                  x.toInt, lonMin + x * lonStep,
-                  tb.flatMap(b => tempDec.decode(b, cell)),
-                  sb.flatMap(b => salDec.decode(b, cell)))
-              }
-            }
-          }
-          .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-            "lon_idx", "lon", "water_temp", "salinity")
-
-      case (Nc4.Contiguous(tAddr, _), Nc4.Contiguous(sAddr, _)) =>
-        // plane-slab split, as in the Nc3 path
-        val planeCells = spec.nLat * spec.nLon
-        val tBytesPer = tempDs.dtype.size; val sBytesPer = salDs.dtype.size
-        val nSlabs = times.size * nD
-        spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
-          .as[Long]
-          .mapPartitions { slabIds =>
-            val raf = new java.io.RandomAccessFile(path, "r")
-            org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-              _ => raf.close())
-            val tBuf = new Array[Byte](planeCells * tBytesPer)
-            val sBuf = new Array[Byte](planeCells * sBytesPer)
-            slabIds.flatMap { slab =>
-              val t = (slab / nD).toInt
-              val d = (slab % nD).toInt
-              raf.seek(tAddr + slab * planeCells * tBytesPer); raf.readFully(tBuf)
-              raf.seek(sAddr + slab * planeCells * sBytesPer); raf.readFully(sBuf)
-              val tb = java.nio.ByteBuffer.wrap(tBuf)
-              val sb = java.nio.ByteBuffer.wrap(sBuf)
-              (0 until planeCells).iterator.map { c =>
-                val y = c / nLon
-                val x = c % nLon
-                (times(t), d, depths(d),
-                  y, latMin + y * latStep,
-                  x, lonMin + x * lonStep,
-                  tempDec.decode(tb, c), salDec.decode(sb, c))
-              }
-            }
-          }
-          .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-            "lon_idx", "lon", "water_temp", "salinity")
-
-      case (tl, sl) => throw new IllegalArgumentException(
-        s"$path: unsupported layout combination $tl / $sl")
-    }
+    Nc4.gridSource(path, Nc4.gridSpecOf(f), f.dataset(tempVar), f.dataset(salVar))
   }
 
-  /** Magic-byte format sniff: NetCDF classic (`CDF\x01`/`\x02`) or
-    * GRD1.
-    */
+  /** Magic-byte sniff: NetCDF classic (`CDF\x01`/`\x02`). */
   def isNetcdf(path: String): Boolean = {
     val in = new java.io.FileInputStream(path)
     try {
@@ -362,92 +266,51 @@ object GridIngest {
       coords(depthVar).toSeq, coords(latVar), coords(lonVar))
   }
 
-  /** Zarr-v2-store ingest — the cloud-native sibling of [[ingestNc4]]
-    * with the SAME output shape. The store is already the distribution
-    * layout: one file per chunk, so each task reads only its own
-    * chunk files (no shared seekable handle at all — on object
-    * storage this is one GET per chunk key, which is precisely what
-    * Zarr was designed to make parallel). Chunks missing from the
-    * store are all-fill per the spec and still emit null cells;
-    * fill-valued (or NaN-filled) cells decode to SQL null at ingest,
-    * the engine-wide sentinel rule.
+  /** Zarr-store ingest, one chunk per block ([[Zarr.gridSource]]): each
+    * task reads only its own chunk objects (one GET per chunk key on
+    * object storage). Missing chunks are all fill and still emit null
+    * cells.
     */
   def ingestZarr(spark: SparkSession, path: String, partitions: Int = 32,
                  tempVar: String = "water_temp",
-                 salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
-    val tMeta = Zarr.readArrayMeta(s"$path/$tempVar")
-    val sMeta = Zarr.readArrayMeta(s"$path/$salVar")
-    require(tMeta.rank == 4 && sMeta.shape == tMeta.shape,
-      s"$path: expected matching 4-D (time,depth,lat,lon) data variables")
-    require(sMeta.chunks == tMeta.chunks,
-      s"$path: $tempVar and $salVar have different chunk shapes")
-    val spec = zarrGridSpecOf(path)
-    require(tMeta.shape == Seq(spec.times.size.toLong, spec.depths.size.toLong,
-        spec.nLat.toLong, spec.nLon.toLong),
-      s"$path: data shape ${tMeta.shape} does not match coordinate lengths")
-    val times = spec.times; val depths = spec.depths
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val dims = tMeta.shape
-    val origins = tMeta.chunkOrigins
-    val nPart = math.max(1, math.min(partitions, origins.size))
-    val tFill = tMeta.fillValue; val sFill = sMeta.fillValue
-    val confBox = Zarr.confBox()
-    spark.sparkContext.parallelize(origins, nPart)
-      .mapPartitions { it =>
-        // chunk GETs go through the Hadoop FileSystem (ConfBox carries
-        // the driver's conf) — one ranged GET per chunk key on object
-        // storage, no shared-POSIX-mount assumption
-        def load(meta: Zarr.ArrayMeta, origin: Seq[Long]): Option[java.nio.ByteBuffer] = {
-          val b = Zarr.chunkBytesOrNull(confBox, meta, origin)
-          if (b == null) None else Some(java.nio.ByteBuffer.wrap(b))
-        }
-        def dec(meta: Zarr.ArrayMeta, fill: Option[Double],
-                buf: Option[java.nio.ByteBuffer], inChunk: Seq[Int]): Option[Double] =
-          buf.flatMap { b =>
-            val v = Zarr.cellValue(meta, b, inChunk)
-            if (v.isNaN || fill.exists(_ == v)) None else Some(v)
-          }
-        it.flatMap { origin =>
-          val tb = load(tMeta, origin)
-          val sb = load(sMeta, origin)
-          val Seq(ct, cd, cy, cx) = tMeta.chunks
-          for {
-            it0 <- (0 until ct).iterator; t = origin(0) + it0 if t < dims(0)
-            id0 <- 0 until cd; d = origin(1) + id0 if d < dims(1)
-            iy <- 0 until cy; y = origin(2) + iy if y < dims(2)
-            ix <- 0 until cx; x = origin(3) + ix if x < dims(3)
-          } yield {
-            val inChunk = Seq(it0, id0, iy, ix)
-            (times(t.toInt), d.toInt, depths(d.toInt),
-              y.toInt, latMin + y * latStep,
-              x.toInt, lonMin + x * lonStep,
-              dec(tMeta, tFill, tb, inChunk), dec(sMeta, sFill, sb, inChunk))
-          }
-        }
-      }
-      .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-        "lon_idx", "lon", "water_temp", "salinity")
-  }
+                 salVar: String = "salinity"): DataFrame =
+    rows(spark, Zarr.gridSource(path, zarrGridSpecOf(path), tempVar, salVar), partitions)
 
-  /** Full ingestion job: grid file (NetCDF-3 classic, netCDF-4/HDF5,
-    * or GRD1, sniffed by magic) → sentinel cleanup → canonical
+  /** Full ingestion job: grid container (Zarr store, netCDF-4/HDF5 or
+    * NetCDF-3 classic, sniffed) → sentinel cleanup → canonical
     * time-partitioned parquet grid (ready for TrackProfile).
     */
   def ingestToParquet(spark: SparkSession, gridPath: String,
                       parquetPath: String): GridSpec = {
-    val (spec, df) =
+    val src =
       if (Zarr.isZarr(gridPath))
-        (zarrGridSpecOf(gridPath), ingestZarr(spark, gridPath))
-      else if (Nc4.isHdf5(gridPath))
-        (Nc4.gridSpecOf(Nc4.readFile(gridPath)), ingestNc4(spark, gridPath))
-      else if (isNetcdf(gridPath)) {
-        val hdr = Nc3.readHeader(gridPath)
-        (Nc3.gridSpecOf(gridPath, hdr), ingestNc(spark, gridPath))
-      } else
-        (Grd1.readHeader(gridPath).spec, ingest(spark, gridPath))
-    SyntheticGrid.writeGrid(SyntheticGrid.cleanSentinels(df), parquetPath)
-    spec
+        Zarr.gridSource(gridPath, zarrGridSpecOf(gridPath), "water_temp", "salinity")
+      else if (Nc4.isHdf5(gridPath)) nc4Source(gridPath, "water_temp", "salinity")
+      else if (isNetcdf(gridPath)) Nc3.gridSource(gridPath, "water_temp", "salinity")
+      else throw new IllegalArgumentException(
+        s"$gridPath: not a NetCDF-3 classic file, an HDF5 (netCDF-4) file or a Zarr store")
+    SyntheticGrid.writeGrid(SyntheticGrid.cleanSentinels(rows(spark, src, 32)), parquetPath)
+    src.spec
+  }
+
+  /** Driver-side collect of a small long-format grid into dense
+    * (time, depth, lat, lon) row-major arrays of water_temp and
+    * salinity, NaN = missing: the input of the fixture writers.
+    */
+  private[graft] def denseOf(grid: DataFrame, spec: GridSpec): (Array[Double], Array[Double]) = {
+    val (nD, nY, nX) = (spec.depths.size, spec.nLat, spec.nLon)
+    val n = spec.times.size.toLong * nD * nY * nX
+    require(n < Int.MaxValue / 4, "fixture writers take small grids only")
+    val temp = Array.fill(n.toInt)(Double.NaN)
+    val sal = Array.fill(n.toInt)(Double.NaN)
+    val tIdx = spec.times.zipWithIndex.toMap
+    grid.select("time", "depth_idx", "lat_idx", "lon_idx", "water_temp", "salinity")
+      .collect()
+      .foreach { r =>
+        val off = (((tIdx(r.getLong(0)).toLong * nD + r.getInt(1)) * nY + r.getInt(2)) * nX + r.getInt(3)).toInt
+        if (!r.isNullAt(4)) temp(off) = r.getDouble(4)
+        if (!r.isNullAt(5)) sal(off) = r.getDouble(5)
+      }
+    (temp, sal)
   }
 }

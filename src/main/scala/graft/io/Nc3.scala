@@ -6,9 +6,8 @@ import graft.io.SyntheticGrid.GridSpec
 /** NetCDF-3 "classic" container support, JDK-only (VERDICT r2 item 2).
   *
   * The reference reads HYCOM as netCDF over OPeNDAP
-  * (trackplot_hycom.py:144,244). Round 2 ingested GRD1, a self-defined
-  * stand-in; this module reads (and, for fixtures, writes) the REAL
-  * public on-disk format — the NetCDF Classic Format Specification
+  * (trackplot_hycom.py:144,244); this module reads (and, for fixtures,
+  * writes) the public on-disk format — the NetCDF Classic Format Specification
   * (CDF-1 magic `CDF\x01`, CDF-2 64-bit-offset `CDF\x02`), which is a
   * flat big-endian header + dense row-major data and needs no codec
   * library:
@@ -29,10 +28,11 @@ import graft.io.SyntheticGrid.GridSpec
   * time axis as either a fixed dim or the unlimited record dim.
   *
   * Header parsing is driver-side (KBs); bulk data is read
-  * slab-parallel by [[GridIngest.ingest]] — each task seeks straight
-  * to its (t, d) plane using [[Nc3.SlabReader]], the distributed analog
-  * of the reference's per-point hyperslab requests. On a cluster the
-  * `RandomAccessFile` becomes any seekable stream (HDFS/S3 ranged GET).
+  * plane-parallel by [[GridIngest.ingestNc]] through [[gridSource]] —
+  * each task seeks straight to its (t, d) planes, the distributed
+  * analog of the reference's per-point hyperslab requests. On a
+  * cluster the `RandomAccessFile` becomes any seekable stream
+  * (HDFS/S3 ranged GET).
   */
 object Nc3 {
 
@@ -159,87 +159,60 @@ object Nc3 {
   // ------------------------------------------------- driver-side axes
 
   /** Full values of a small (axis) variable, CF-unpacked, fills → NaN.
-    * Driver-side — axes are KBs; bulk variables go through SlabReader.
+    * Driver-side — axes are KBs; bulk variables go through [[gridSource]].
     */
   def readAxis(path: String, hdr: Header, name: String): Array[Double] = {
     val v = hdr.variable(name)
     require(v.dimIds.size <= 1, s"$name is not an axis variable")
     val n = v.dimIds.headOption.map(hdr.dimLen).getOrElse(1)
-    val dec = decoderOf(hdr, v)
+    val (raw, cf) = (rawOf(v.ncType), GridIngest.Cf.of(v.numAtt))
     val ts = typeSize(v.ncType)
     val raf = new RandomAccessFile(path, "r")
     try {
-      val out = new Array[Double](n)
       if (hdr.isRecordVar(v)) {
+        // one value per record, recSize apart
         val buf = new Array[Byte](ts)
-        var r = 0
-        while (r < n) {
-          raf.seek(v.begin + r * hdr.recSize)
-          raf.readFully(buf)
-          out(r) = dec.decode(java.nio.ByteBuffer.wrap(buf), 0).getOrElse(Double.NaN)
-          r += 1
+        val bb = java.nio.ByteBuffer.wrap(buf)
+        Array.tabulate(n) { r =>
+          raf.seek(v.begin + r * hdr.recSize); raf.readFully(buf)
+          cf(raw(bb, 0))
         }
       } else {
         val buf = new Array[Byte](n * ts)
-        raf.seek(v.begin)
-        raf.readFully(buf)
+        raf.seek(v.begin); raf.readFully(buf)
         val bb = java.nio.ByteBuffer.wrap(buf)
-        var i = 0
-        while (i < n) { out(i) = dec.decode(bb, i).getOrElse(Double.NaN); i += 1 }
+        Array.tabulate(n)(i => cf(raw(bb, i)))
       }
-      out
     } finally raf.close()
   }
 
-  /** Per-variable decode recipe — small and Serializable, captured by
-    * executor closures instead of the full header.
-    */
-  final case class Decoder(ncType: Int, fill: Option[Double], scale: Double,
-                           offset: Double) extends Serializable {
-    /** Raw value i of a big-endian buffer, unpacked; None if fill. */
-    def decode(bb: java.nio.ByteBuffer, i: Int): Option[Double] = {
-      val raw: Double = ncType match {
-        case NcByte => bb.get(i).toDouble
-        case NcShort => bb.getShort(i * 2).toDouble
-        case NcInt => bb.getInt(i * 4).toDouble
-        case NcFloat => bb.getFloat(i * 4).toDouble
-        case NcDouble => bb.getDouble(i * 8)
-      }
-      if (fill.contains(raw) || raw.isNaN) None
-      else Some(raw * scale + offset)
-    }
+  /** Raw big-endian element reader of an nc_type. */
+  def rawOf(ncType: Int): GridIngest.Raw = ncType match {
+    case NcByte => (bb, i) => bb.get(i).toDouble
+    case NcShort => (bb, i) => bb.getShort(i * 2).toDouble
+    case NcInt => (bb, i) => bb.getInt(i * 4).toDouble
+    case NcFloat => (bb, i) => bb.getFloat(i * 4).toDouble
+    case NcDouble => (bb, i) => bb.getDouble(i * 8)
+    case other => throw new IllegalArgumentException(s"unsupported nc_type $other")
   }
 
-  def decoderOf(hdr: Header, v: Variable): Decoder =
-    Decoder(v.ncType,
-      v.numAtt("_FillValue").orElse(v.numAtt("missing_value")),
-      v.numAtt("scale_factor").getOrElse(1.0),
-      v.numAtt("add_offset").getOrElse(0.0))
-
-  /** Seek-and-decode access to one 4-D variable's (t, d) planes —
-    * Serializable; executors capture only offsets and the decode
-    * recipe, never the parsed header.
+  /** The file as a [[GridIngest.Source]]: one (t, d) plane per block,
+    * each task seeking straight to its planes. A record variable's
+    * planes of time t sit in record t (`recSize` apart); a fixed
+    * variable's planes are contiguous.
     */
-  final case class SlabReader(begin: Long, isRecord: Boolean, recSize: Long,
-                              nD: Int, planeCells: Int, dec: Decoder)
-      extends Serializable {
-    def typeBytes: Int = typeSize(dec.ncType)
-    def planeBytes: Int = planeCells * typeBytes
-
-    /** Byte offset of plane (t, d). */
-    def planeOffset(t: Int, d: Int): Long =
-      if (isRecord) begin + t * recSize + d.toLong * planeBytes
-      else begin + (t.toLong * nD + d) * planeBytes
-
-    def readPlane(raf: RandomAccessFile, t: Int, d: Int, buf: Array[Byte]): java.nio.ByteBuffer = {
-      raf.seek(planeOffset(t, d))
-      raf.readFully(buf, 0, planeBytes)
-      java.nio.ByteBuffer.wrap(buf)
+  def gridSource(path: String, tempVar: String, salVar: String): GridIngest.Source = {
+    val hdr = readHeader(path)
+    val spec = gridSpecOf(path, hdr)
+    val vars = Seq(tempVar, salVar).map(hdr.variable)
+    val Seq(temp, sal) = vars.map { v =>
+      val planeBytes = spec.nLat.toLong * spec.nLon * typeSize(v.ncType)
+      val tStride = if (hdr.isRecordVar(v)) hdr.recSize else spec.depths.size * planeBytes
+      GridIngest.Planes(v.begin, tStride, planeBytes, rawOf(v.ncType), GridIngest.Cf.of(v.numAtt))
     }
+    GridIngest.Source(spec, vars.map(v => v.name -> hdr.shape(v).map(_.toLong)),
+      Seq(1, 1, spec.nLat, spec.nLon), GridIngest.planeReader(path, temp, sal))
   }
-
-  def slabReaderOf(hdr: Header, v: Variable, nD: Int, planeCells: Int): SlabReader =
-    SlabReader(v.begin, hdr.isRecordVar(v), hdr.recSize, nD, planeCells, decoderOf(hdr, v))
 
   /** Derive the engine's canonical [[GridSpec]] from a HYCOM-shaped
     * file: 1-D axes `time/depth/lat/lon` (uniform lat/lon required —
@@ -248,29 +221,19 @@ object Nc3 {
     */
   def gridSpecOf(path: String, hdr: Header,
                  timeVar: String = "time", depthVar: String = "depth",
-                 latVar: String = "lat", lonVar: String = "lon"): GridSpec = {
-    val times = readAxis(path, hdr, timeVar).map(t => math.round(t)).toSeq
-    val depths = readAxis(path, hdr, depthVar).toSeq
-    val lats = readAxis(path, hdr, latVar)
-    val lons = readAxis(path, hdr, lonVar)
-    def uniformStep(a: Array[Double], what: String): Double = {
-      if (a.length < 2) return 1.0
-      val step = a(1) - a(0)
-      a.sliding(2).foreach { w =>
-        require(math.abs((w(1) - w(0)) - step) < 1e-6, s"$what axis not uniform")
-      }
-      step
-    }
-    GridSpec(lats.head, uniformStep(lats, "lat"), lats.length,
-      lons.head, uniformStep(lons, "lon"), lons.length, depths, times)
-  }
+                 latVar: String = "lat", lonVar: String = "lon"): GridSpec =
+    SyntheticGrid.specFromAxes(
+      readAxis(path, hdr, timeVar).map(t => math.round(t)).toSeq,
+      readAxis(path, hdr, depthVar).toSeq,
+      readAxis(path, hdr, latVar),
+      readAxis(path, hdr, lonVar))
 
   // --------------------------------------------------------- writer
 
   /** Fixture/dev writer: dump a long-format grid DataFrame (the
     * [[SyntheticGrid]] shape) as a CDF-1 classic file, HYCOM-style:
-    * axes time/depth/lat/lon + two data variables. Driver-side collect,
-    * small fixtures only — the symmetric analog of `Grd1.write`.
+    * axes time/depth/lat/lon + two data variables. Driver-side collect
+    * ([[GridIngest.denseOf]]), small fixtures only.
     *
     * @param packShort  store data vars as CF short-packed
     *                   (scale_factor/add_offset/_FillValue = -30000)
@@ -284,19 +247,7 @@ object Nc3 {
     val nY = spec.nLat; val nX = spec.nLon
     val planeCells = nY * nX
     val n = nT.toLong * nD * planeCells
-    require(n < Int.MaxValue / 4, "Nc3.write is a small-fixture utility")
-
-    // dense row-major value arrays (NaN = missing)
-    val temp = Array.fill(n.toInt)(Double.NaN)
-    val sal = Array.fill(n.toInt)(Double.NaN)
-    val tIdx = spec.times.zipWithIndex.toMap
-    grid.select("time", "depth_idx", "lat_idx", "lon_idx", "water_temp", "salinity")
-      .collect()
-      .foreach { r =>
-        val off = (((tIdx(r.getLong(0)).toLong * nD + r.getInt(1)) * nY + r.getInt(2)) * nX + r.getInt(3)).toInt
-        if (!r.isNullAt(4)) temp(off) = r.getDouble(4)
-        if (!r.isNullAt(5)) sal(off) = r.getDouble(5)
-      }
+    val (temp, sal) = GridIngest.denseOf(grid, spec)
 
     // CF packing: data = (value - offset) / scale, rounded to short
     val (dataType, scale, addOff, fillRaw) =

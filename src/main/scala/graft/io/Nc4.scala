@@ -544,19 +544,12 @@ object Nc4 {
 
   // ------------------------------------------------------------- decoding
 
-  /** CF decode recipe (same convention as [[Nc3.Decoder]]). */
-  def decoderOf(ds: Dataset): Decoder =
-    Decoder(ds.dtype,
-      ds.numAtt("_FillValue").orElse(ds.numAtt("missing_value")).orElse(ds.fillMsg),
-      ds.numAtt("scale_factor").getOrElse(1.0),
-      ds.numAtt("add_offset").getOrElse(0.0))
-
-  final case class Decoder(dtype: Dtype, fill: Option[Double], scale: Double,
-                           offset: Double) extends Serializable {
-    def decode(bb: ByteBuffer, i: Int): Option[Double] = {
-      val raw = dtype.read(bb, i * dtype.size)
-      if (fill.contains(raw) || raw.isNaN) None else Some(raw * scale + offset)
-    }
+  /** The CF rule of [[GridIngest.Cf]]; the HDF5 fill-value message
+    * stands in for an absent `_FillValue` attribute.
+    */
+  def cfOf(ds: Dataset): GridIngest.Cf = {
+    val cf = GridIngest.Cf.of(ds.numAtt)
+    if (cf.fill.isNaN) cf.copy(fill = ds.fillMsg.getOrElse(Double.NaN)) else cf
   }
 
   /** Inflate + unshuffle one stored chunk to its raw bytes.
@@ -565,6 +558,13 @@ object Nc4 {
   final case class ChunkReader(filters: Seq[Filter], elemSize: Int,
                                chunkCells: Int) extends Serializable {
     def rawBytes: Int = chunkCells * elemSize
+
+    /** Reads and decodes stored chunk `c` of `raf`. */
+    def read(raf: RandomAccessFile, c: ChunkRef): ByteBuffer = {
+      val stored = new Array[Byte](c.storedSize)
+      raf.seek(c.addr); raf.readFully(stored)
+      ByteBuffer.wrap(decode(stored, c.storedSize, c.filterMask))
+    }
 
     def decode(stored: Array[Byte], storedSize: Int, filterMask: Int): Array[Byte] = {
       var data = if (storedSize == stored.length) stored
@@ -615,12 +615,13 @@ object Nc4 {
     */
   def readAll(path: String, ds: Dataset): Array[Double] = {
     val n = ds.cells.toInt
-    val dec = decoderOf(ds)
+    val cf = cfOf(ds)
+    def dec(bb: ByteBuffer, i: Int): Double = cf(ds.dtype.read(bb, i * ds.dtype.size))
     val out = Array.fill(n)(Double.NaN)
     ds.layout match {
       case Compact(data) =>
         val bb = ByteBuffer.wrap(data)
-        (0 until n).foreach(i => out(i) = dec.decode(bb, i).getOrElse(Double.NaN))
+        (0 until n).foreach(i => out(i) = dec(bb, i))
       case Contiguous(addr, _) =>
         if (addr != Undef) { // undefined = never written, all fill
           val raf = new RandomAccessFile(path, "r")
@@ -628,44 +629,17 @@ object Nc4 {
             val b = new Array[Byte](n * ds.dtype.size)
             raf.seek(addr); raf.readFully(b)
             val bb = ByteBuffer.wrap(b)
-            (0 until n).foreach(i => out(i) = dec.decode(bb, i).getOrElse(Double.NaN))
+            (0 until n).foreach(i => out(i) = dec(bb, i))
           } finally raf.close()
         }
       case Chunked(_, chunkDims) =>
         val cr = chunkReaderOf(ds)
+        val strides = chunkDims.scanRight(1)(_ * _).tail
         val raf = new RandomAccessFile(path, "r")
-        try {
-          chunkRefs(path, ds).foreach { ch =>
-            val stored = new Array[Byte](ch.storedSize)
-            raf.seek(ch.addr); raf.readFully(stored)
-            val raw = ByteBuffer.wrap(cr.decode(stored, ch.storedSize, ch.filterMask))
-            // rank-general copy chunk → flat row-major output
-            val rank = ds.dims.size
-            val within = Array.fill(rank)(0L)
-            var cell = 0
-            var more = true
-            while (more && cell < cr.chunkCells) {
-              var off = 0L; var inBounds = true
-              var d = 0
-              while (d < rank) {
-                val coord = ch.offsets(d) + within(d)
-                if (coord >= ds.dims(d)) inBounds = false
-                off = off * ds.dims(d) + coord
-                d += 1
-              }
-              if (inBounds) out(off.toInt) = dec.decode(raw, cell).getOrElse(Double.NaN)
-              // increment odometer over chunkDims
-              var k = rank - 1
-              var carry = true
-              while (carry && k >= 0) {
-                within(k) += 1
-                if (within(k) < chunkDims(k)) carry = false
-                else { within(k) = 0; k -= 1 }
-              }
-              more = !carry
-              cell += 1
-            }
-          }
+        try chunkRefs(path, ds).foreach { ch =>
+          val raw = cr.read(raf, ch)
+          GridIngest.chunkCells(ds.dims, ch.offsets, chunkDims, strides)
+            .foreach { case (flat, elem) => out(flat.toInt) = dec(raw, elem) }
         } finally raf.close()
     }
     out
@@ -683,6 +657,49 @@ object Nc4 {
       readAll(f.path, f.dataset(latVar)),
       readAll(f.path, f.dataset(lonVar)))
 
+  /** Two 4-D data variables of `path` as a [[GridIngest.Source]]: one
+    * stored chunk per block when both are chunked alike (a chunk absent
+    * from the index was never written: all fill), one (t, d) plane per
+    * block when both are contiguous.
+    */
+  def gridSource(path: String, spec: GridSpec, temp: Dataset, sal: Dataset): GridIngest.Source = {
+    val shapes = Seq(temp, sal).map(ds => ds.name -> ds.dims)
+    (temp.layout, sal.layout) match {
+      case (tl: Chunked, sl: Chunked) =>
+        require(tl.chunkDims == sl.chunkDims,
+          s"$path: ${temp.name} and ${sal.name} have different chunk shapes")
+        val strides = tl.chunkDims.scanRight(1)(_ * _).tail
+        val vars = Seq(temp, sal).map { ds =>
+          (chunkReaderOf(ds), ds.dtype, cfOf(ds),
+            chunkRefs(path, ds).map(c => c.offsets.map(_.toInt) -> c).toMap)
+        }
+        GridIngest.Source(spec, shapes, tl.chunkDims, () => new GridIngest.BlockReader {
+          private val raf = new RandomAccessFile(path, "r")
+          def read(b: GridIngest.Block, t: Array[Double], s: Array[Double]): Unit =
+            vars.zip(Seq(t, s)).foreach { case ((rd, dtype, cf, chunks), out) =>
+              chunks.get(Seq(b.t, b.d, b.y, b.x)) match {
+                case None => java.util.Arrays.fill(out, 0, b.cells, Double.NaN)
+                case Some(c) =>
+                  val bb = rd.read(raf, c)
+                  GridIngest.gather(b, strides, i => dtype.read(bb, i * dtype.size), cf, out)
+              }
+            }
+          override def close(): Unit = raf.close()
+        })
+      case (Contiguous(tAddr, _), Contiguous(sAddr, _)) =>
+        val Seq(tp, sp) = Seq(temp -> tAddr, sal -> sAddr).map { case (ds, addr) =>
+          val dt = ds.dtype
+          val planeBytes = spec.nLat.toLong * spec.nLon * dt.size
+          GridIngest.Planes(addr, spec.depths.size * planeBytes, planeBytes,
+            (bb, i) => dt.read(bb, i * dt.size), cfOf(ds))
+        }
+        GridIngest.Source(spec, shapes, Seq(1, 1, spec.nLat, spec.nLon),
+          GridIngest.planeReader(path, tp, sp))
+      case (tl, sl) => throw new IllegalArgumentException(
+        s"$path: unsupported layout combination $tl / $sl")
+    }
+  }
+
   // --------------------------------------------------------------- writer
 
   /** Fixture/dev writer: dump a long-format grid DataFrame (the
@@ -691,8 +708,8 @@ object Nc4 {
     * v1 object headers, old-style symbol-table root group, axis
     * datasets contiguous, data variables chunked one (t, d) plane per
     * chunk with optional deflate(+shuffle) filters and CF packing
-    * attributes. Driver-side collect, small fixtures only — the
-    * symmetric analog of [[Nc3.write]].
+    * attributes. Driver-side collect ([[GridIngest.denseOf]]), small
+    * fixtures only — the symmetric analog of [[Nc3.write]].
     */
   def write(grid: org.apache.spark.sql.DataFrame, spec: GridSpec, path: String,
             packShort: Boolean = true, gzip: Boolean = true,
@@ -700,19 +717,7 @@ object Nc4 {
     val nT = spec.times.size; val nD = spec.depths.size
     val nY = spec.nLat; val nX = spec.nLon
     val planeCells = nY * nX
-    val n = nT.toLong * nD * planeCells
-    require(n < Int.MaxValue / 4, "Nc4.write is a small-fixture utility")
-
-    val temp = Array.fill(n.toInt)(Double.NaN)
-    val sal = Array.fill(n.toInt)(Double.NaN)
-    val tIdx = spec.times.zipWithIndex.toMap
-    grid.select("time", "depth_idx", "lat_idx", "lon_idx", "water_temp", "salinity")
-      .collect()
-      .foreach { r =>
-        val off = (((tIdx(r.getLong(0)).toLong * nD + r.getInt(1)) * nY + r.getInt(2)) * nX + r.getInt(3)).toInt
-        if (!r.isNullAt(4)) temp(off) = r.getDouble(4)
-        if (!r.isNullAt(5)) sal(off) = r.getDouble(5)
-      }
+    val (temp, sal) = GridIngest.denseOf(grid, spec)
 
     val (scale, addOff, fillRaw) =
       if (packShort) (0.001, 20.0, -30000.0) else (1.0, 0.0, -30000.0)

@@ -36,8 +36,9 @@ object SyntheticGrid {
 
   /** [[GridSpec]] from raw 1-D coordinate axes — the ONE place the
     * uniform-step validation and axis conventions live (every grid
-    * container reader — netCDF-4, Zarr — derives its spec here, so a
-    * tolerance or convention change cannot silently diverge readers).
+    * container reader — NetCDF-3, netCDF-4, Zarr, DAP2 — derives its
+    * spec here, so a tolerance or convention change cannot silently
+    * diverge readers).
     */
   def specFromAxes(times: Seq[Long], depths: Seq[Double],
                    lats: Array[Double], lons: Array[Double]): GridSpec = {

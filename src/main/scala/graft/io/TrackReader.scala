@@ -9,10 +9,12 @@ import graft.fn.{TimeFns, GeoFns}
 /** S1 track sources (SURVEY.md §2.1): both track CSV schemas present in
   * the reference repo, normalized to one canonical shape:
   *
-  *   (point_id, ts, hour, lat, lon, stormname)
+  *   (point_id, ts, hour, lat, lon, stormname, storm_id)
   *
-  * with lon wrapped to [0,360) (P3, trackplot_hycom.py:167-170) and
-  * `hour` = integer hours since 2000-01-01T00Z (F1).
+  * with lon wrapped to [0,360) (P3, trackplot_hycom.py:167-170),
+  * `hour` = integer hours since 2000-01-01T00Z (F1), and `storm_id`
+  * the stable per-storm key that, with `point_id`, identifies a fix in
+  * a multi-storm feed.
   */
 object TrackReader {
 
@@ -64,15 +66,16 @@ object TrackReader {
     * parallelizes across storms while each storm's fixes (a few
     * hundred rows at most) rank inside one bounded partition. A global
     * `Window.orderBy` would funnel the whole feed through a single
-    * partition — the scale-killer this avoids. point_id is unique per
-    * (storm_id, ts); single-storm fixtures get the same 0..N-1 ids the
-    * reference's file order implies.
+    * partition — the scale-killer this avoids. point_id restarts at 0
+    * per storm, so (storm_id, point_id) is the fix key; single-storm
+    * fixtures get the same 0..N-1 ids the reference's file order
+    * implies.
     */
   private def normalize(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("storm_id")).orderBy(col("ts"))
     df.withColumn("lon", GeoFns.wrapLon360(col("lon")))
       .withColumn("hour", TimeFns.hoursSince2000(col("ts")))
       .withColumn("point_id", row_number().over(w).cast("long") - 1)
-      .select("point_id", "ts", "hour", "lat", "lon", "stormname")
+      .select("point_id", "ts", "hour", "lat", "lon", "stormname", "storm_id")
   }
 }

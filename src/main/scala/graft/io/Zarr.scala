@@ -2,6 +2,8 @@ package graft.io
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.io.SyntheticGrid.GridSpec
+
 /** Zarr v2 store reader (Zarr storage specification version 2,
   * https://zarr.readthedocs.io/en/stable/spec/v2.html — the
   * cloud-native chunked-array format xarray/climate pipelines publish
@@ -523,40 +525,32 @@ object Zarr {
     out
   }
 
-  /** Read one cell out of a decoded chunk buffer by its
-    * WITHIN-CHUNK coordinates (bounds already applied by the caller).
-    * Addressing follows the chunk-internal `order`: C = row-major,
-    * F = column-major, per the spec's "storage order of the chunk's
-    * elements".
-    */
-  def cellValue(meta: ArrayMeta, buf: ByteBuffer, inChunk: Seq[Int]): Double = {
-    var flat = 0L
-    if (meta.order == 'C') {
-      var d = 0
-      while (d < meta.rank) { flat = flat * meta.chunks(d) + inChunk(d); d += 1 }
-    } else {
-      var d = meta.rank - 1
-      while (d >= 0) { flat = flat * meta.chunks(d) + inChunk(d); d -= 1 }
-    }
-    val at = (flat * meta.dtype.size).toInt
-    // order() mutates a field on the caller's buffer — zero-alloc; the
-    // buffer is task-private, and this is the per-cell hot loop
-    // (duplicate() here cost one ByteBuffer allocation PER CELL)
-    val b = buf.order(
-      if (meta.dtype.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-    (meta.dtype.kind, meta.dtype.size) match {
-      case ('f', 4) => b.getFloat(at).toDouble
-      case ('f', 8) => b.getDouble(at)
-      case ('i', 1) => b.get(at).toDouble
-      case ('i', 2) => b.getShort(at).toDouble
-      case ('i', 4) => b.getInt(at).toDouble
-      case ('i', 8) => b.getLong(at).toDouble
-      case ('u', 1) => (b.get(at) & 0xff).toDouble
-      case ('u', 2) => (b.getShort(at) & 0xffff).toDouble
-      case ('u', 4) => (b.getInt(at) & 0xffffffffL).toDouble
-      case other => throw new IllegalStateException(s"unreachable dtype $other")
-    }
+  /** Raw element reader of a dtype, over a buffer from [[buffer]]. */
+  def rawOf(dtype: Dtype): GridIngest.Raw = (dtype.kind, dtype.size) match {
+    case ('f', 4) => (b, i) => b.getFloat(i * 4).toDouble
+    case ('f', 8) => (b, i) => b.getDouble(i * 8)
+    case ('i', 1) => (b, i) => b.get(i).toDouble
+    case ('i', 2) => (b, i) => b.getShort(i * 2).toDouble
+    case ('i', 4) => (b, i) => b.getInt(i * 4).toDouble
+    case ('i', 8) => (b, i) => b.getLong(i * 8).toDouble
+    case ('u', 1) => (b, i) => (b.get(i) & 0xff).toDouble
+    case ('u', 2) => (b, i) => (b.getShort(i * 2) & 0xffff).toDouble
+    case ('u', 4) => (b, i) => (b.getInt(i * 4) & 0xffffffffL).toDouble
+    case other => throw new IllegalStateException(s"unreachable dtype $other")
   }
+
+  /** A decoded chunk, in the array's byte order. */
+  def buffer(meta: ArrayMeta, decoded: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(decoded).order(
+      if (meta.dtype.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+
+  /** Element strides of a stored chunk per dimension, following the
+    * chunk-internal `order`: C = row-major, F = column-major, per the
+    * spec's "storage order of the chunk's elements".
+    */
+  def chunkStrides(meta: ArrayMeta): Seq[Int] =
+    if (meta.order == 'C') meta.chunks.scanRight(1)(_ * _).tail
+    else meta.chunks.reverse.scanRight(1)(_ * _).tail.reverse
 
   /** Whole-array driver-side read (coordinate variables: 1-D, tiny).
     * Missing chunks yield the fill value.
@@ -565,33 +559,48 @@ object Zarr {
     require(meta.shape.product <= (1 << 22),
       s"${meta.dir}: readAll is for small coordinate arrays, " +
         s"shape ${meta.shape} is not one — use the distributed ingest")
-    val n = meta.shape.product.toInt
-    val out = new Array[Double](n)
-    val fill = meta.fillValue.getOrElse(Double.NaN)
-    java.util.Arrays.fill(out, fill)
-    val strides = new Array[Long](meta.rank)
-    var s = 1L
-    (meta.rank - 1 to 0 by -1).foreach { d => strides(d) = s; s *= meta.shape(d) }
+    val out = Array.fill(meta.shape.product.toInt)(meta.fillValue.getOrElse(Double.NaN))
+    val raw = rawOf(meta.dtype)
+    val strides = chunkStrides(meta)
     val conf = driverConf()
     meta.chunkOrigins.foreach { origin =>
-      val raw = getObjectOrNull(conf, s"${meta.dir}/${meta.chunkKey(origin)}")
-      if (raw != null) {
-        val buf = ByteBuffer.wrap(decodeChunk(meta, raw))
-        val dims = meta.chunks
-        def walk(d: Int, inChunk: List[Int], flat: Long): Unit =
-          if (d == meta.rank)
-            out(flat.toInt) = cellValue(meta, buf, inChunk.reverse)
-          else {
-            var i = 0
-            while (i < dims(d) && origin(d) + i < meta.shape(d)) {
-              walk(d + 1, i :: inChunk, flat + (origin(d) + i) * strides(d))
-              i += 1
-            }
-          }
-        walk(0, Nil, 0L)
+      val stored = getObjectOrNull(conf, s"${meta.dir}/${meta.chunkKey(origin)}")
+      if (stored != null) {
+        val buf = buffer(meta, decodeChunk(meta, stored))
+        GridIngest.chunkCells(meta.shape, origin, meta.chunks, strides)
+          .foreach { case (flat, elem) => out(flat.toInt) = raw(buf, elem) }
       }
     }
     out
+  }
+
+  /** The store's two 4-D data variables as a [[GridIngest.Source]]: one
+    * chunk per block, read by the task that owns it (one GET per chunk
+    * key). A missing chunk is all fill; a cell equal to `fill_value`,
+    * or NaN, is null.
+    */
+  def gridSource(path: String, spec: GridSpec, tempVar: String,
+                 salVar: String): GridIngest.Source = {
+    val metas = Seq(tempVar, salVar).map(v => readArrayMeta(s"$path/$v"))
+    require(metas(0).chunks == metas(1).chunks,
+      s"$path: $tempVar and $salVar have different chunk shapes")
+    val vars = metas.map(m => (m, rawOf(m.dtype),
+      GridIngest.Cf(fill = m.fillValue.getOrElse(Double.NaN)), chunkStrides(m)))
+    // chunk GETs go through the Hadoop FileSystem (ConfBox carries the
+    // driver's conf) — no shared-POSIX-mount assumption
+    val box = confBox()
+    GridIngest.Source(spec, Seq(tempVar, salVar).zip(metas.map(_.shape)), metas(0).chunks,
+      () => new GridIngest.BlockReader {
+        def read(b: GridIngest.Block, t: Array[Double], s: Array[Double]): Unit =
+          vars.zip(Seq(t, s)).foreach { case ((meta, raw, cf, strides), out) =>
+            val stored = chunkBytesOrNull(box, meta, Seq(b.t, b.d, b.y, b.x).map(_.toLong))
+            if (stored == null) java.util.Arrays.fill(out, 0, b.cells, Double.NaN)
+            else {
+              val buf = buffer(meta, stored)
+              GridIngest.gather(b, strides, i => raw(buf, i), cf, out)
+            }
+          }
+      })
   }
 
   /** Driver-side Hadoop configuration: the active session's (it
@@ -743,7 +752,7 @@ object Zarr {
     * assumption that tasks share a POSIX mount.
     */
   def writeStore(grid: org.apache.spark.sql.DataFrame,
-                 spec: graft.io.SyntheticGrid.GridSpec, path: String,
+                 spec: GridSpec, path: String,
                  chunkT: Int = 1, chunkD: Int = 8,
                  chunkY: Int = 64, chunkX: Int = 64,
                  formatV3: Boolean = false): Unit = {

@@ -33,7 +33,13 @@ object TrackProfile {
       maxDepthLevels: Int = 25,        // P5 (trackplot_hycom.py:148)
       tileSize: Int = 32)              // tile geometry of a tiled grid layout
 
-  /** @param track  canonical track (point_id, hour, lat, lon, ...)
+  /** One row per (storm_id, point_id, depth): (point_id, hour,
+    * grid_time, depth_idx, depth, water_temp, salinity, storm_id),
+    * sorted by storm_id, point_id, depth_idx. point_id restarts per
+    * storm, so a multi-storm track table profiles each storm apart.
+    *
+    * @param track  canonical track (point_id, hour, lat, lon, storm_id,
+    *               ...; TrackReader's output)
     * @param grid   long-format grid (Schemas.gridSchema), sentinels
     *               already cleaned (SyntheticGrid.cleanSentinels)
     * @param spec   the grid's regular-axis geometry (enables the O(1)
@@ -47,7 +53,7 @@ object TrackProfile {
       .createDataFrame(spec.times.zipWithIndex.map { case (t, i) => (i, t) })
       .toDF("t_idx", "t_val")
     val withTime = AsofJoin.nearestBroadcast(
-      track, Seq("point_id"), "hour", timeAxis, "t_idx", "t_val", "gtime")
+      track, Seq("storm_id", "point_id"), "hour", timeAxis, "t_idx", "t_val", "gtime")
 
     // J1: O(1) arithmetic snap onto the regular lat/lon axes
     val snappedLat = NearestJoin.snapRegular(
@@ -71,7 +77,7 @@ object TrackProfile {
         GeoFns.vincentyKmNative(col("lat"), col("lon"), col("n_lat"), col("n_lon"))
     }
     val withDist = stencil.withColumn("d_km", distCol)
-      .select("point_id", "hour", "gtime_t", "n_i", "n_j", "d_km")
+      .select("storm_id", "point_id", "hour", "gtime_t", "n_i", "n_j", "d_km")
 
     // J4 gather: equi-join the tiny stencil side against the grid on
     // exact integer keys; broadcast the stencil so the grid side never
@@ -108,13 +114,15 @@ object TrackProfile {
          Idw.idw(col("salinity"), col("d_km")))
     }
     gathered
-      .groupBy(col("point_id"), col("hour"), col("gtime_t").as("grid_time"),
-               col("depth_idx"), col("depth"))
+      .groupBy(col("storm_id"), col("point_id"), col("hour"),
+               col("gtime_t").as("grid_time"), col("depth_idx"), col("depth"))
       .agg(tempAgg.as("water_temp"), salAgg.as("salinity"))
+      .select("point_id", "hour", "grid_time", "depth_idx", "depth",
+              "water_temp", "salinity", "storm_id")
       // presentation-only global sort: the profile is ~|track|·25 rows
       // (2 000 for Hermine) regardless of grid size, so the range
       // exchange is O(output), never O(data); drop it for headless
       // sinks that don't care about order
-      .orderBy("point_id", "depth_idx")
+      .orderBy("storm_id", "point_id", "depth_idx")
   }
 }

@@ -1,10 +1,7 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.io.Dap2
 
@@ -32,144 +29,30 @@ class Dap2Spec extends SparkSpec {
     if (y == 1 && x == 2) Fill
     else t * 1000 + d * 100 + y * 10 + x
 
-  private def dds(projection: Option[String]): String = {
-    def gridDecl(v: String) =
-      s"""    Grid {
-         |     ARRAY:
-         |        Int16 $v[time = 2][depth = 3][lat = 4][lon = 5];
-         |     MAPS:
-         |        Float64 time[time = 2];
-         |        Float64 depth[depth = 3];
-         |        Float64 lat[lat = 4];
-         |        Float64 lon[lon = 5];
-         |    } $v;""".stripMargin
-    // Seq of pairs: declaration ORDER is part of the DODS wire
-    // contract (values follow DDS order), a Map would scramble it
-    val all = Seq(
-      "time" -> "    Float64 time[time = 2];",
-      "depth" -> "    Float64 depth[depth = 3];",
-      "lat" -> "    Float64 lat[lat = 4];",
-      "lon" -> "    Float64 lon[lon = 5];",
-      "water_temp" -> gridDecl("water_temp"),
-      "salinity" -> gridDecl("salinity"))
-    val members = projection match {
-      case None => all.map(_._2)
-      case Some(p) =>
-        val v = p.takeWhile(_ != '[')
-        // a projected GRID hyperslab degenerates to a bare array of
-        // the sliced shape (what real servers return for array slices)
-        if (v == "water_temp" || v == "salinity") {
-          val slicedDims = sliceDims(p)
-          Seq(s"    Int16 $v" + slicedDims.map { case (n, s) => s"[$n = $s]" }
-            .mkString + ";")
-        } else Seq(all.toMap.apply(v))
+  private val fixture = {
+    def values(v: String) = Array.tabulate(2 * 3 * 4 * 5) { i =>
+      val r = raw(i / 60, i / 20 % 3, i / 5 % 4, i % 5)
+      (if (v == "salinity" && r != Fill) r + 7 else r).toDouble
     }
-    s"Dataset {\n${members.mkString("\n")}\n} fixture;\n"
+    val packing = Seq("Int16 _FillValue -30000", "Float64 scale_factor 0.001",
+      "Float64 add_offset 20.0")
+    Dap2Fixture.Dataset(times.map(_.toDouble), depths, lats, lons, Seq(
+      "water_temp" -> Dap2Fixture.Var("Int16", values("water_temp"),
+        packing :+ "String units \"degC\""),
+      "salinity" -> Dap2Fixture.Var("Int16", values("salinity"), packing)))
   }
 
-  private val DimNames = Seq("time", "depth", "lat", "lon")
-  private val DimSizes = Seq(2, 3, 4, 5)
-
-  /** Parse "[a:b]" / "[i]" hyperslabs of a projection into
-    * (dimName, size) pairs.
-    */
-  private def sliceDims(p: String): Seq[(String, Int)] = {
-    val rs = ranges(p)
-    rs.zipWithIndex.map { case ((lo, hi), i) => (DimNames(i), hi - lo + 1) }
-  }
-
-  private def ranges(p: String): Seq[(Int, Int)] = {
-    val re = """\[(\d+)(?::(\d+))?\]""".r
-    val rs = re.findAllMatchIn(p).map { m =>
-      val lo = m.group(1).toInt
-      val hi = Option(m.group(2)).map(_.toInt).getOrElse(lo)
-      (lo, hi)
-    }.toSeq
-    if (rs.isEmpty) DimSizes.map(s => (0, s - 1)) else rs
-  }
-
-  private def xdrInts(out: DataOutputStream, vals: Seq[Int]): Unit = {
-    out.writeInt(vals.size); out.writeInt(vals.size)
-    vals.foreach(out.writeInt)
-  }
-
-  private def xdrDoubles(out: DataOutputStream, vals: Seq[Double]): Unit = {
-    out.writeInt(vals.size); out.writeInt(vals.size)
-    vals.foreach(out.writeDouble)
-  }
-
-  private def dodsBody(projection: String): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    bos.write(dds(Some(projection)).getBytes(StandardCharsets.US_ASCII))
-    bos.write("\nData:\n".getBytes(StandardCharsets.US_ASCII))
-    val out = new DataOutputStream(bos)
-    val v = projection.takeWhile(_ != '[')
-    v match {
-      case "time" => xdrDoubles(out, times.map(_.toDouble))
-      case "depth" => xdrDoubles(out, depths)
-      case "lat" => xdrDoubles(out, lats)
-      case "lon" => xdrDoubles(out, lons)
-      case "water_temp" | "salinity" =>
-        val Seq((t0, t1), (d0, d1), (y0, y1), (x0, x1)) = ranges(projection)
-        val vals = for {
-          t <- t0 to t1; d <- d0 to d1; y <- y0 to y1; x <- x0 to x1
-        } yield {
-          val r = raw(t, d, y, x)
-          if (v == "salinity" && r != Fill) r + 7 else r
-        }
-        xdrInts(out, vals)
-      case other => fail(s"fixture server got unexpected projection: $other")
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  private val das: String =
-    """Attributes {
-      |    water_temp {
-      |        Int16 _FillValue -30000;
-      |        Float64 scale_factor 0.001;
-      |        Float64 add_offset 20.0;
-      |        String units "degC";
-      |    }
-      |    salinity {
-      |        Int16 _FillValue -30000;
-      |        Float64 scale_factor 0.001;
-      |        Float64 add_offset 20.0;
-      |    }
-      |}""".stripMargin
-
-  private def withServer[A](f: String => A): A = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/", (ex: HttpExchange) => {
-      val path = ex.getRequestURI.getPath
-      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-      val body: Array[Byte] =
-        if (path.endsWith(".dds"))
-          dds(None).getBytes(StandardCharsets.US_ASCII)
-        else if (path.endsWith(".das"))
-          das.getBytes(StandardCharsets.US_ASCII)
-        else if (path.endsWith(".dods"))
-          dodsBody(query)
-        else Array.emptyByteArray
-      ex.sendResponseHeaders(if (body.isEmpty) 404 else 200, body.length)
-      ex.getResponseBody.write(body)
-      ex.close()
-    })
-    server.start()
-    try f(s"http://127.0.0.1:${server.getAddress.getPort}/hycom/fixture")
-    finally server.stop(0)
-  }
+  private def withServer[A](f: String => A): A = Dap2Fixture.serve(fixture)(f)
 
   test("DDS parser: grids, maps, dims; DAS parser: packing attributes") {
-    val d = Dap2.parseDds(dds(None))
+    val d = Dap2.parseDds(fixture.dds)
     assert(d.name === "fixture")
     assert(d.arrays.map(_.name) === Seq("time", "depth", "lat", "lon"))
     val g = d.gridFor("water_temp").get
     assert(g.array.dapType === Dap2.DInt16)
     assert(g.array.dims.map(_.size) === Seq(2, 3, 4, 5))
     assert(g.maps.map(_.name) === Seq("time", "depth", "lat", "lon"))
-    val a = Dap2.parseDas(das)
+    val a = Dap2.parseDas(fixture.das)
     assert(a("water_temp")("scale_factor").toDouble === 0.001)
     assert(a("water_temp")("_FillValue").toDouble === -30000.0)
     assert(a("water_temp")("units") === "degC")
@@ -228,6 +111,32 @@ class Dap2Spec extends SparkSpec {
       val r0 = rows.find(r => r.getInt(3) == 2 && r.getInt(5) == 3).get
       assert(r0.getDouble(4) === 11.0) // 10.0 + 2*0.5
       assert(r0.getDouble(6) === 271.5) // 270.0 + 3*0.5
+    }
+  }
+
+  test("a NaN cell and a missing_value-only variable both arrive as null") {
+    // water_temp: Float64, no attributes, one NaN cell; salinity: Int16
+    // packed, flagged by missing_value alone (no _FillValue)
+    val n = 2 * 1 * 2 * 3
+    val temp = Array.tabulate(n)(i => if (i == 5) Double.NaN else 20.0 + i)
+    val sal = Array.tabulate(n)(i => if (i == 7) Fill.toDouble else 100.0 + i)
+    Dap2Fixture.serve(Dap2Fixture.Dataset(Seq(0.0, 6.0), Seq(0.0), Seq(10.0, 10.5),
+        Seq(270.0, 270.5, 271.0), Seq(
+          "water_temp" -> Dap2Fixture.Var("Float64", temp, Nil),
+          "salinity" -> Dap2Fixture.Var("Int16", sal, Seq(
+            "Int16 missing_value -30000", "Float64 scale_factor 0.5",
+            "Float64 add_offset 10.0"))))) { url =>
+      val rows = Dap2.ingest(spark, url).collect()
+        .map(r => ((r.getLong(0), r.getInt(3), r.getInt(5)), r)).toMap
+      assert(rows.size === n)
+      for (t <- 0 until 2; y <- 0 until 2; x <- 0 until 3) {
+        val i = (t * 2 + y) * 3 + x
+        val r = rows((t * 6L, y, x))
+        if (i == 5) assert(r.isNullAt(7), s"NaN cell $i must be null, got ${r.get(7)}")
+        else assert(r.getDouble(7) === temp(i))
+        if (i == 7) assert(r.isNullAt(8), s"missing_value cell $i must be null, got ${r.get(8)}")
+        else assert(r.getDouble(8) === sal(i) * 0.5 + 10.0)
+      }
     }
   }
 

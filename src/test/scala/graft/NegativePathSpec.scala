@@ -9,13 +9,13 @@ import graft.io.{GridIngest, TrackIngest, TrackReader}
 class NegativePathSpec extends SparkSpec {
   import spark.implicits._
 
-  test("GRD1 reader rejects a non-GRD1 file with a clear error") {
-    val p = java.nio.file.Files.createTempFile("not", ".grd1")
+  test("grid ingest rejects an unrecognized file, naming the containers it reads") {
+    val p = java.nio.file.Files.createTempFile("not", ".grid")
     java.nio.file.Files.write(p, Array.fill[Byte](64)(0x42))
     val e = intercept[IllegalArgumentException] {
-      GridIngest.Grd1.readHeader(p.toString)
+      GridIngest.ingestToParquet(spark, p.toString, p.toString + ".parquet")
     }
-    assert(e.getMessage.contains("not a GRD1 file"))
+    Seq("NetCDF-3", "HDF5", "Zarr").foreach(c => assert(e.getMessage.contains(c), e.getMessage))
   }
 
   test("KMZ ingest of an archive without a .kml entry fails loudly") {

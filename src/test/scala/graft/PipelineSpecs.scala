@@ -132,4 +132,22 @@ class TrackProfileSpec extends SparkSpec {
     } yield (GeoFns.vincentyKmScala(pt._1, pt._2, nlat, nlon), v)
     assert(math.abs(profNearest - cands.minBy(_._1)._2) < 1e-9)
   }
+
+  test("multi-storm track table: each storm profiles as it does on its own") {
+    // one read over both storms; their point_ids both start at 0
+    val both = TrackProfile.profile(TrackReader.readIbtracs(spark,
+      "data/{Hermine_track,Sandy_track}.csv"), grid, spec).collect()
+    assert(both.length === (13 + 45) * 25)
+    for (storm <- Seq("Hermine_track", "Sandy_track")) {
+      val alone = TrackProfile.profile(
+        TrackReader.readIbtracs(spark, s"data/$storm.csv"), grid, spec).collect()
+      val mine = both.filter(_.getString(7) == alone.head.getString(7))
+      assert(mine.length === alone.length, storm)
+      mine.zip(alone).foreach { case (a, b) =>
+        assert((0 to 4).map(a.get) === (0 to 4).map(b.get), storm)
+        for (i <- Seq(5, 6)) assert(a.isNullAt(i) === b.isNullAt(i) &&
+          (a.isNullAt(i) || math.abs(a.getDouble(i) - b.getDouble(i)) < 1e-9), (storm, a, b))
+      }
+    }
+  }
 }
